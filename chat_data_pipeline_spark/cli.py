@@ -60,100 +60,11 @@ logger = logging.getLogger("chat_data_pipeline_spark")
 
 
 def load_yaml(path: str) -> dict:
-    """Minimal YAML loader: uses PyYAML when available, else a built-in
-    subset parser good for the config shapes above (nested dicts, lists of
-    scalars/dicts, ints/floats/bools/strings)."""
-    try:
-        import yaml  # type: ignore
+    """Load a YAML config (PyYAML ``safe_load``)."""
+    import yaml
 
-        with open(path) as fh:
-            return yaml.safe_load(fh)
-    except ImportError:
-        return _mini_yaml(open(path).read())
-
-
-def _scalar(tok: str):
-    tok = tok.strip().strip('"').strip("'")
-    low = tok.lower()
-    if low in ("true", "yes"):
-        return True
-    if low in ("false", "no"):
-        return False
-    if low in ("null", "~", ""):
-        return None
-    for cast in (int, float):
-        try:
-            return cast(tok)
-        except ValueError:
-            pass
-    return tok
-
-
-def _mini_yaml(text: str):
-    """Indentation-based subset parser (dicts, lists, inline lists, scalars)."""
-    lines = [
-        (len(l) - len(l.lstrip()), l.strip())
-        for l in text.splitlines()
-        if l.strip() and not l.strip().startswith("#")
-    ]
-
-    def parse_block(i: int, indent: int):
-        if i >= len(lines) or lines[i][0] < indent:
-            return {}, i
-        if lines[i][1].startswith("- "):
-            items = []
-            while i < len(lines) and lines[i][0] >= indent and lines[i][1].startswith("- "):
-                item_indent, content = lines[i][0], lines[i][1][2:]
-                if ":" in content and not content.startswith(("[", "{")):
-                    # dict item: first pair inline, following pairs indented deeper
-                    key, _, val = content.partition(":")
-                    d = {}
-                    if val.strip():
-                        d[key.strip()] = _parse_value(val.strip())
-                        i += 1
-                    else:
-                        sub, i = parse_block(i + 1, item_indent + 2)
-                        d[key.strip()] = sub
-                    while i < len(lines) and lines[i][0] > item_indent:
-                        k, _, v = lines[i][1].partition(":")
-                        if v.strip():
-                            d[k.strip()] = _parse_value(v.strip())
-                            i += 1
-                        else:
-                            sub, i = parse_block(i + 1, lines[i][0] + 2)
-                            d[k.strip()] = sub
-                    items.append(d)
-                else:
-                    items.append(_parse_value(content))
-                    i += 1
-            return items, i
-        out = {}
-        while i < len(lines) and lines[i][0] == indent:
-            key, _, val = lines[i][1].partition(":")
-            if val.strip():
-                out[key.strip()] = _parse_value(val.strip())
-                i += 1
-            else:
-                sub, i = parse_block(i + 1, indent + 2)
-                out[key.strip()] = sub
-        return out, i
-
-    def _parse_value(v: str):
-        v = v.strip()
-        if v.startswith("[") and v.endswith("]"):
-            inner = v[1:-1].strip()
-            return [_scalar(x) for x in inner.split(",")] if inner else []
-        if v.startswith("{") and v.endswith("}"):
-            inner = v[1:-1].strip()
-            out = {}
-            for part in (inner.split(",") if inner else []):
-                k, _, val = part.partition(":")
-                out[k.strip()] = _scalar(val.strip())
-            return out
-        return _scalar(v)
-
-    result, _ = parse_block(0, 0)
-    return result
+    with open(path) as fh:
+        return yaml.safe_load(fh)
 
 
 def _build_preprocessor(column: str, cfg: dict, forbid_cleaners: bool = False):
@@ -296,11 +207,14 @@ def _run_training(spark: SparkSession, df: DataFrame, train_cfg: dict) -> None:
 
 
 def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
-    """Config-driven index maintenance (r13 bm25, r14 ivf — engine
-    extension): build / extend / maintain the persisted BM25 text index
-    and/or the persisted IVF ANN index from the same YAML that runs the
-    pipeline, so a curation job can leave a servable index behind (or
-    deliver its batch into one) without a separate script.
+    """Config-driven store maintenance (engine extension): build / extend
+    / maintain any of the five persisted stores — the BM25 text index, the
+    IVF and IVF-PQ ANN indexes, the MinHash signature store and the SRP
+    near-dup store — from the same YAML that runs the pipeline, so a
+    curation job can leave a servable store behind (or deliver its batch
+    into one) without a separate script.  Every kind runs through one
+    runner (:func:`_run_store_indexing`) driven by the kind table
+    ``maintenance.STORE_KINDS``.
 
     YAML shape::
 
@@ -347,12 +261,16 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
             n_codewords: 16
             dim: 64
             action: build             # build (default) | extend | delete
-                                      #   | compact  (NO rebuild: PQ
-                                      #   storage is lossy — rebuild from
-                                      #   the source corpus via build)
+                                      #   | compact
+                                      #   | rebuild (re-encode: PQ storage
+                                      #   is lossy, so the source vectors
+                                      #   come back from `dataset:` or
+                                      #   this run's rows; optional
+                                      #   n_centroids/m/n_codewords
+                                      #   re-shard)
             batch_id: delivery-042    # required for extend / delete
             ids_dataset: /ids.parquet # optional delete-id table
-            dst_path: /indexes/v2     # optional for compact
+            dst_path: /indexes/v2     # optional for compact/rebuild
             alias: /indexes/pq_serving    # optional cutover pointer
           dedup:
             path: /stores/corpus_sigs # persisted MinHash signature store
@@ -365,6 +283,26 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
             ids_dataset: /ids.parquet # optional delete-id table
             dst_path: /stores/v2      # optional for compact
             alias: /stores/serving    # optional cutover pointer
+          neardup:
+            path: /stores/ref_vectors # persisted SRP-LSH embedding store
+            dataset: /tables/emb.parquet  # optional vector source
+            vec_col: embedding
+            id_expr: id
+            n_planes: 4               # default: corpus-scaled occupancy
+            n_tables: 4
+            dim: 64
+            threshold: 0.45           # cosine verify threshold
+            action: build             # build (default) | extend | delete
+                                      #   | compact
+            batch_id: crawl-042       # required for extend / delete
+            ids_dataset: /ids.parquet # optional delete-id table
+            dst_path: /stores/v2      # optional for compact
+            alias: /stores/serving    # optional cutover pointer
+
+    Deletes take victim ids from `ids_dataset:` or this run's curated
+    rows; a `dataset:` key on a delete is refused on every kind — it names
+    a build/extend source, so a reused extend config flipped to delete
+    would otherwise tombstone that whole table.
 
     Every kind also accepts ``action: auto_compact`` (r15): read the
     store's own artifacts via ``maintenance_plan`` and compact only when
@@ -390,7 +328,7 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
     explicit ``overwrite_dst: true`` (a restore is destructive by
     design); both roots are leased for the copy.
 
-    Both kinds share the commit-ledger crash posture: indexing is an EAGER
+    All five kinds share the commit-ledger crash posture: indexing is an EAGER
     action (it writes the artifacts), a config run that dies mid-delivery
     leaves the batch invisible to probes and re-running the same config
     re-commits it, and every base (re)build window is meta-less so a crash
@@ -398,26 +336,20 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
     loop is one config: rebuild/compact into `dst_path`, then the swap
     lands ONLY after the action completed — a run that dies mid-action
     leaves the alias serving the old root."""
-    known = {"bm25", "ivf", "ivfpq", "dedup", "neardup"}
-    unknown = set(index_cfg) - known
+    from chat_data_pipeline_spark.operators.maintenance import STORE_KINDS
+
+    unknown = set(index_cfg) - set(STORE_KINDS)
     if unknown:
         raise ValueError(
-            f"index: unknown index kind(s) {sorted(unknown)}; supported: {sorted(known)}"
+            f"index: unknown index kind(s) {sorted(unknown)}; "
+            f"supported: {sorted(STORE_KINDS)}"
         )
-    handlers = {
-        "bm25": _run_bm25_indexing,
-        "ivf": _run_ivf_indexing,
-        "ivfpq": _run_ivfpq_indexing,
-        "dedup": _run_dedup_store_indexing,
-        "neardup": _run_neardup_store_indexing,
-    }
-    for kind, handler in handlers.items():
+    for kind in STORE_KINDS:
         if kind not in index_cfg:
             continue
         spec = dict(index_cfg.get(kind) or {})
         if "path" not in spec:
-            handler(spark, df, spec)  # surfaces the kind's own config error
-            continue
+            raise ValueError(f"index.{kind} needs `path` (the store root)")
         # ONE writer lease per index block, covering EVERY action — not
         # just compact/rebuild: an extend or delete committing between a
         # concurrent compactor's ledger snapshot and its base rewrite
@@ -442,7 +374,7 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
                 _stack.enter_context(
                     _cli_lease(spark, _root, f"cli:index.{kind}", spec)
                 )
-            handler(spark, df, spec)
+            _run_store_indexing(spark, df, spec, kind)
 
 
 def _finish_with_alias(
@@ -608,300 +540,107 @@ def _run_restore(spark: SparkSession, spec: dict, kind: str) -> None:
     )
 
 
-def _run_bm25_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    from chat_data_pipeline_spark.operators import retrieval as RT
+def _spec_params(spec: dict, params: dict) -> dict:
+    """Verb keyword arguments from an `index.<kind>` block per the kind
+    table's ``{key: (cast, default)}``; a None default passes None when the
+    key is unset or falsy."""
+    out = {}
+    for key, (cast, default) in params.items():
+        if default is None:
+            out[key] = cast(spec[key]) if spec.get(key) else None
+        else:
+            out[key] = cast(spec.get(key, default))
+    return out
 
-    if "path" not in spec:
-        raise ValueError("index.bm25 needs `path` (the index root)")
-    column = str(spec.get("column", "response"))
-    id_expr = str(spec.get("id_expr", "id"))
+
+def _run_store_indexing(
+    spark: SparkSession, df: DataFrame, spec: dict, kind: str
+) -> None:
+    """One `index.<kind>` block, for every store kind: the kind table
+    (``maintenance.STORE_KINDS``) names the verbs and the build/rebuild
+    keys; this runner owns the validation, the source frame and the alias
+    cutover.  Text kinds (bm25, dedup) index the curated rows' `column`
+    (default `response`); vector kinds (ivf, ivfpq, neardup) read
+    `vec_col` (default `embedding`) from `dataset:` — the common layout
+    where embeddings live beside the corpus, keyed by the same ids — or
+    from the curated rows.  A fresh build OWNS the meta (normalized
+    internal column names); a delivery passes the same temp names as
+    OVERRIDES and the operator adopts the target's meta names itself, so
+    a config can extend a store built by any caller without the CLI
+    pre-reading meta."""
+    from chat_data_pipeline_spark.operators.maintenance import (
+        STORE_KINDS,
+        store_verb,
+    )
+
+    sk = STORE_KINDS[kind]
+    path = str(spec["path"])
     action = str(spec.get("action", "build"))
-    if action in ("build", "extend"):
-        source = df.select(
-            F.expr(id_expr).alias("__doc_id__"), F.col(column).alias("__text__")
+    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
+    actions = [
+        "build", "extend", "delete", "compact", *(["rebuild"] if sk.rebuild else []),
+        "auto_compact", "snapshot", "restore",
+    ]
+    if action not in actions:
+        quoted = [repr(a) for a in actions]
+        raise ValueError(
+            f"index.{kind} action must be {', '.join(quoted[:-1])} or "
+            f"{quoted[-1]}, got {action!r}"
+        )
+    if action in ("extend", "delete") and "batch_id" not in spec:
+        raise ValueError(f"index.{kind} action={action} needs `batch_id`")
+    reads_source = action in ("build", "extend") or (
+        action == "rebuild" and sk.rebuild_reads_source
+    )
+    if reads_source:
+        id_expr = str(spec.get("id_expr", "id"))
+        if sk.vectors:
+            base = (
+                spark.read.parquet(str(spec["dataset"]))
+                if spec.get("dataset") else df
+            )
+            cols = {"id_col": "__vec_id__", sk.payload_arg: "__vec__"}
+            payload = F.col(str(spec.get("vec_col", "embedding")))
+        else:
+            base = df
+            cols = {"id_col": "__doc_id__", sk.payload_arg: "__text__"}
+            payload = F.col(str(spec.get("column", "response")))
+        source = base.select(
+            F.expr(id_expr).alias(cols["id_col"]),
+            payload.alias(cols[sk.payload_arg]),
         )
     if action == "build":
-        RT.build_text_index(source, str(spec["path"]), "__text__", "__doc_id__")
+        store_verb(kind, "build")(
+            source, path, **cols, **_spec_params(spec, sk.build_params)
+        )
     elif action == "extend":
-        if "batch_id" not in spec:
-            raise ValueError("index.bm25 action=extend needs `batch_id`")
-        RT.extend_text_index(
-            source, str(spec["path"]), spec["batch_id"], "__text__", "__doc_id__"
-        )
+        store_verb(kind, "extend")(source, path, spec["batch_id"], **cols)
     elif action == "delete":
-        # takedown delivery: tombstone the ids WITHOUT a rebuild — ids come
-        # from this run's curated rows by default (curate-the-victims
-        # configs), or from `ids_dataset:` (a plain id table)
-        if "batch_id" not in spec:
-            raise ValueError("index.bm25 action=delete needs `batch_id`")
-        base = (
-            spark.read.parquet(str(spec["ids_dataset"]))
-            if spec.get("ids_dataset")
-            else df
-        )
-        RT.delete_from_text_index(
-            spark,
-            str(spec["path"]),
-            base.select(F.expr(id_expr).alias("__doc_id__")),
-            spec["batch_id"],
+        # takedown delivery: tombstone the ids WITHOUT a rebuild
+        store_verb(kind, "delete")(
+            spark, path, _delete_ids_frame(spark, df, spec, kind), spec["batch_id"]
         )
     elif action == "compact":
-        # maintenance action: folds committed deliveries (and any
-        # tombstones, which become physical) into a fresh base — ignores
-        # this run's rows; pair with a separate extend config
-        RT.compact_text_index(
-            spark,
-            str(spec["path"]),
-            dst_index=str(spec["dst_path"]) if spec.get("dst_path") else None,
+        # folds committed deliveries (and any tombstones, which become
+        # physical) into a fresh base — ignores this run's rows
+        store_verb(kind, "compact")(spark, path, dst_index=dst)
+    elif action == "rebuild":
+        # ivf: the drift repair — coarse-retrain over base+committed
+        # postings (see ivf_index_drift_report's thresholds); ivfpq: PQ
+        # storage is lossy, so the supplied source vectors are re-encoded
+        args, kw = ((source,), cols) if reads_source else ((), {})
+        store_verb(kind, "rebuild")(
+            spark, path, *args, dst_index=dst, **kw,
+            **_spec_params(spec, sk.rebuild_params),
         )
     elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "bm25")
+        action = _run_auto_compact(spark, spec, kind)
     elif action == "snapshot":
-        _run_snapshot(spark, spec, "bm25")
-    elif action == "restore":
-        _run_restore(spark, spec, "bm25")
+        _run_snapshot(spark, spec, kind)
     else:
-        raise ValueError(
-            "index.bm25 action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.bm25: %s %s", action, spec["path"])
-
-
-def _run_ivf_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The ANN twin of the bm25 block (closes the r13 verdict gap: an
-    embedding-curation config can now leave a servable IVF index behind
-    the way a text config can).  Vectors come from the curated rows by
-    default; `dataset:` points at a separate (id, vector) table instead —
-    the common layout where embeddings live beside the corpus, keyed by
-    the same ids."""
-    from chat_data_pipeline_spark.operators import similarity as SIM
-
-    if "path" not in spec:
-        raise ValueError("index.ivf needs `path` (the index root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in ("build", "extend", "delete", "compact", "rebuild",
-                      "auto_compact", "snapshot", "restore"):
-        raise ValueError(
-            "index.ivf action must be 'build', 'extend', 'delete', "
-            f"'compact', 'rebuild', 'auto_compact', 'snapshot' or "
-            f"'restore', got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.ivf action={action} needs `batch_id`")
-    if action in ("build", "extend"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        # a fresh build OWNS the meta (normalized internal column names); a
-        # delivery passes the same temp names as OVERRIDES and the operator
-        # adopts the target's meta names itself — a config can extend an
-        # index built by any caller without the CLI pre-reading meta
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        SIM.build_ivf_index(
-            source,
-            path,
-            n_centroids=int(spec.get("n_centroids", 16)),
-            id_col="__vec_id__",
-            vec_col="__vec__",
-            coarse=str(spec.get("coarse", "md5")),
-            dim=int(spec.get("dim", 64)),
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "extend":
-        SIM.extend_ivf_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        # takedown delivery: tombstone the vector ids without a rebuild
-        SIM.delete_from_ivf_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "ivf"), spec["batch_id"]
-        )
-    elif action == "compact":
-        SIM.compact_ivf_index(spark, path, dst_index=dst)
-    elif action == "rebuild":
-        # the drift repair: coarse-retrain over base+committed postings,
-        # re-assign, cut over (see ivf_index_drift_report's thresholds)
-        SIM.rebuild_ivf_index(
-            spark,
-            path,
-            dst_index=dst,
-            n_centroids=int(spec["n_centroids"]) if spec.get("n_centroids") else None,
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "ivf")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "ivf")
-    elif action == "restore":
-        _run_restore(spark, spec, "ivf")
+        _run_restore(spark, spec, kind)
     _finish_with_alias(spark, spec, action, ("compact", "rebuild", "snapshot"))
-    logger.info("index.ivf: %s %s", action, path)
-
-
-def _run_ivfpq_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The COMPRESSED ANN store's config block (closes the r14 verdict's
-    reachability gap: a YAML run could leave behind a BM25, IVF or
-    signature store but not the codes-only store the 100 TB serving story
-    actually reads from).  Same shape as `index.ivf`; `rebuild` (r16)
-    differs from the IVF one because PQ storage is lossy — it REQUIRES
-    the source corpus back (`dataset:` or this run's rows) and re-encodes
-    it through `rebuild_ivfpq_index` (tombstones made physical, folded
-    ids spent, optional `n_centroids`/`m`/`n_codewords` re-shard)."""
-    from chat_data_pipeline_spark.operators import similarity as SIM
-
-    if "path" not in spec:
-        raise ValueError("index.ivfpq needs `path` (the index root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in (
-        "build", "extend", "delete", "compact", "rebuild", "auto_compact",
-        "snapshot", "restore",
-    ):
-        raise ValueError(
-            "index.ivfpq action must be 'build', 'extend', 'delete', "
-            f"'compact', 'rebuild', 'auto_compact', 'snapshot' or "
-            f"'restore', got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.ivfpq action={action} needs `batch_id`")
-    if action in ("build", "extend", "rebuild"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        SIM.build_ivfpq_index(
-            source,
-            path,
-            n_centroids=int(spec.get("n_centroids", 16)),
-            m=int(spec.get("m", 8)),
-            n_codewords=int(spec.get("n_codewords", 16)),
-            dim=int(spec.get("dim", 64)),
-            id_col="__vec_id__",
-            vec_col="__vec__",
-        )
-    elif action == "extend":
-        SIM.extend_ivfpq_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        SIM.delete_from_ivf_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "ivfpq"),
-            spec["batch_id"],
-        )
-    elif action == "compact":
-        SIM.compact_ivf_index(spark, path, dst_index=dst)
-    elif action == "rebuild":
-        SIM.rebuild_ivfpq_index(
-            spark,
-            path,
-            source,
-            dst_index=dst,
-            n_centroids=int(spec["n_centroids"])
-            if spec.get("n_centroids")
-            else None,
-            m=int(spec["m"]) if spec.get("m") else None,
-            n_codewords=int(spec["n_codewords"])
-            if spec.get("n_codewords")
-            else None,
-            id_col="__vec_id__",
-            vec_col="__vec__",
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "ivfpq")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "ivfpq")
-    elif action == "restore":
-        _run_restore(spark, spec, "ivfpq")
-    _finish_with_alias(spark, spec, action, ("compact", "rebuild", "snapshot"))
-    logger.info("index.ivfpq: %s %s", action, path)
-
-
-def _run_dedup_store_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The signature-store twin of the bm25/ivf blocks: build / extend /
-    delete / compact the persisted MinHash store from the same config that
-    curates — so a curation job can leave (or grow) the reference-signature
-    set its successors onboard against.  Signatures come from the CURATED
-    rows; `ids_dataset:` supplies delete ids like the bm25 twin."""
-    from chat_data_pipeline_spark.operators import dedup_store as DS
-
-    if "path" not in spec:
-        raise ValueError("index.dedup needs `path` (the store root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    if action not in ("build", "extend", "delete", "compact", "auto_compact",
-                      "snapshot", "restore"):
-        raise ValueError(
-            "index.dedup action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.dedup action={action} needs `batch_id`")
-    column = str(spec.get("column", "response"))
-    id_expr = str(spec.get("id_expr", "id"))
-    if action == "build":
-        source = df.select(
-            F.expr(id_expr).alias("__doc_id__"), F.col(column).alias("__text__")
-        )
-        DS.build_dedup_index(
-            source,
-            path,
-            column="__text__",
-            id_col="__doc_id__",
-            family=str(spec.get("family", "md5")),
-            ngram_size=int(spec.get("ngram_size", 5)),
-            num_perm=int(spec.get("num_perm", 16)),
-            num_bands=int(spec.get("num_bands", 4)),
-            threshold=float(spec.get("threshold", 0.7)),
-            min_ngram_size=int(spec.get("min_ngram_size", 5)),
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "extend":
-        # the operator resolves the target store's meta itself; the CLI
-        # just names its own columns (one meta read per delivery, not two)
-        source = df.select(F.expr(id_expr).alias("__sid__"), F.col(column))
-        DS.extend_dedup_index(
-            source, path, spec["batch_id"], column=column, id_col="__sid__"
-        )
-    elif action == "delete":
-        base = (
-            spark.read.parquet(str(spec["ids_dataset"]))
-            if spec.get("ids_dataset")
-            else df
-        )
-        DS.delete_from_dedup_index(
-            spark, path, base.select(F.expr(id_expr)), spec["batch_id"]
-        )
-    elif action == "compact":
-        DS.compact_dedup_index(
-            spark,
-            path,
-            dst_index=str(spec["dst_path"]) if spec.get("dst_path") else None,
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "dedup")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "dedup")
-    elif action == "restore":
-        _run_restore(spark, spec, "dedup")
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.dedup: %s %s", action, path)
+    logger.info("index.%s: %s %s", kind, action, path)
 
 
 def _run_onboarding(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
@@ -1015,90 +754,6 @@ def _run_semantic_onboarding(
     return out.drop("__onboard_id__")
 
 
-def _run_neardup_store_indexing(
-    spark: SparkSession, df: DataFrame, spec: dict
-) -> None:
-    """The EMBEDDING near-dup store's config block (r15): build / extend /
-    delete / compact / auto_compact the persisted SRP-LSH store — the
-    semantic twin of `index.dedup`.  Vectors come from `dataset:` (an
-    (id, vector) table) or the curated rows:
-
-        index:
-          neardup:
-            path: /stores/ref_vectors
-            dataset: /tables/emb.parquet
-            vec_col: embedding
-            id_expr: id
-            n_planes: 4
-            n_tables: 4
-            dim: 64
-            threshold: 0.45
-            action: build            # build | extend | delete | compact
-                                     #   | auto_compact
-            batch_id: crawl-042      # required for extend / delete
-            ids_dataset: /ids.parquet
-            dst_path: /stores/v2
-            alias: /stores/serving
-    """
-    from chat_data_pipeline_spark.operators import neardup_store as NS
-
-    if "path" not in spec:
-        raise ValueError("index.neardup needs `path` (the store root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in ("build", "extend", "delete", "compact", "auto_compact",
-                      "snapshot", "restore"):
-        raise ValueError(
-            "index.neardup action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.neardup action={action} needs `batch_id`")
-    if action in ("build", "extend"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        NS.build_neardup_index(
-            source,
-            path,
-            id_col="__vec_id__",
-            vec_col="__vec__",
-            # default None = the corpus-scaled occupancy rule (see the
-            # operator docstring); an explicit n_planes pins it
-            n_planes=int(spec["n_planes"]) if spec.get("n_planes") else None,
-            n_tables=int(spec.get("n_tables", 4)),
-            dim=int(spec.get("dim", 64)),
-            threshold=float(spec.get("threshold", 0.45)),
-        )
-    elif action == "extend":
-        NS.extend_neardup_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        NS.delete_from_neardup_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "neardup"),
-            spec["batch_id"],
-        )
-    elif action == "compact":
-        NS.compact_neardup_index(spark, path, dst_index=dst)
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "neardup")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "neardup")
-    elif action == "restore":
-        _run_restore(spark, spec, "neardup")
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.neardup: %s %s", action, path)
-
-
 def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     """Top-level `takedown:` block (r15) — ONE victim table deleted from
     EVERY store that serves it, in one config:
@@ -1124,13 +779,14 @@ def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     stays idempotent per store); a crash between stores leaves the
     completed ones committed and the re-run re-delivers every store
     idempotently.  Returns the distinct victim-id frame for accounting."""
-    from chat_data_pipeline_spark.operators import dedup_store as DS
-    from chat_data_pipeline_spark.operators import retrieval as RT
-    from chat_data_pipeline_spark.operators import similarity as SIM
+    from chat_data_pipeline_spark.operators.maintenance import (
+        STORE_KINDS,
+        store_verb,
+    )
 
     if "batch_id" not in spec:
         raise ValueError("takedown needs `batch_id`")
-    stores = [k for k in ("bm25", "ivf", "ivfpq", "dedup", "neardup") if spec.get(k)]
+    stores = [k for k in STORE_KINDS if spec.get(k)]
     if not stores:
         raise ValueError(
             "takedown needs at least one store root: bm25/ivf/ivfpq/dedup/neardup"
@@ -1149,20 +805,13 @@ def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     # one deterministic id set for every store: the per-store deletes each
     # scan their own already-deleted sets, so pin the frame once
     victims = victims.localCheckpoint(eager=True)
-    from chat_data_pipeline_spark.operators import neardup_store as NS
-
-    deleters = {
-        "bm25": RT.delete_from_text_index,
-        "ivf": SIM.delete_from_ivf_index,
-        "ivfpq": SIM.delete_from_ivf_index,  # deletes are flavor-agnostic
-        "dedup": DS.delete_from_dedup_index,
-        "neardup": NS.delete_from_neardup_index,
-    }
     for kind in stores:
         # per-root writer lease (r16): a compliance run may fan into roots
         # that live delivery streams are writing — serialize per store
         with _cli_lease(spark, str(spec[kind]), "cli:takedown", spec):
-            deleters[kind](spark, str(spec[kind]), victims, spec["batch_id"])
+            store_verb(kind, "delete")(
+                spark, str(spec[kind]), victims, spec["batch_id"]
+            )
         logger.info("takedown: %s %s", kind, spec[kind])
     return victims
 
@@ -1605,20 +1254,22 @@ def _index_block_is_corpus_free(index_cfg: dict) -> bool:
     `dataset:`; deletes may source victims from `ids_dataset:`.  The
     text stores' build/extend always index the curated rows, so those
     keep requiring `datasets:`."""
-    for kind in ("bm25", "ivf", "ivfpq", "dedup", "neardup"):
+    from chat_data_pipeline_spark.operators.maintenance import STORE_KINDS
+
+    for kind, sk in STORE_KINDS.items():
         spec = index_cfg.get(kind)
         if not spec:
             continue
         action = str(spec.get("action", "build"))
         if action in ("compact", "auto_compact", "snapshot", "restore"):
             continue
-        if action == "rebuild" and kind == "ivf":
+        if action == "rebuild" and sk.rebuild and not sk.rebuild_reads_source:
             # the IVF rebuild re-trains from the store's OWN committed
             # postings — it never reads a corpus (the ivfpq rebuild DOES:
             # PQ storage is lossy, so it needs `dataset:` back)
             continue
         if (
-            kind in ("ivf", "ivfpq", "neardup")
+            sk.vectors
             and action in ("build", "extend", "rebuild")
             and spec.get("dataset")
         ):

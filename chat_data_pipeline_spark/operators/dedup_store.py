@@ -42,20 +42,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators.retrieval import (
+    _batch_health,
     _committed_batches,
-    read_meta_row,
-    _fold_manifest_forward,
-    _fs_for,
+    _deliver_tombstones,
+    _fold_compact,
     _guard_batch_id_kind,
     _guard_delivery_id_type,
     _guard_spent_batch_id,
     _guard_tombstoned_delivery,
     _tombstoned_ids,
-    cluster_for_partitioned_write,
-    folded_clear,
-    invalidate_index_meta,
+    _write_artifact,
+    _write_store_base,
     ledger_commit,
-    ledger_reset,
+    read_meta_row,
     validate_batch_id,
 )
 
@@ -114,35 +113,11 @@ def _bands_for(df: DataFrame, column: str, id_col: str, m: dict) -> DataFrame:
     return bands.filter(~F.col("sig").isin([bytes(s) for s in sentinel]))
 
 
-def _write_dedup_base(
-    spark, index_path: str, bands: DataFrame, meta_row, clear_folded: bool = True
-) -> None:
-    """Base write with the shared crash posture: meta deleted FIRST (the
-    whole (re)build window is meta-less — probes of a partial root fail
-    loudly), tombstones cleared inside that window, band-clustered salted
-    postings written through the root (clearing stale extension batches,
-    static overwrite pinned), ledger reset, meta written LAST as the
-    commit marker."""
-    invalidate_index_meta(spark, index_path)
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    fs.delete(tpath, True)
-    if clear_folded:
-        folded_clear(spark, index_path)
-    cluster_for_partitioned_write(
-        bands.withColumn("batch", F.lit("base")), ["band"], F.col("sig")
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "band").parquet(f"{index_path}/bands")
-    ledger_reset(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [meta_row],
-        "family string, ngram_size int, num_perm int, num_bands int, "
-        "threshold double, min_ngram_size int, seed int, "
-        "id_type string, sig_type string, text_col string, id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+_META = (
+    "family string, ngram_size int, num_perm int, num_bands int, "
+    "threshold double, min_ngram_size int, seed int, "
+    "id_type string, sig_type string, text_col string, id_col string"
+)
 
 
 def build_dedup_index(
@@ -180,15 +155,17 @@ def build_dedup_index(
     bands = _bands_for(df.select(id_col, column), column, id_col, m)
     id_type = dict(df.dtypes)[id_col]
     sig_type = "string" if family == "md5" else "binary"
-    _write_dedup_base(
+    _write_store_base(
         spark,
         index_path,
-        bands,
+        ("bands",),
+        lambda root: _write_artifact(bands, root, "bands", "base", "band", "sig"),
         (
             family, m["ngram_size"], m["num_perm"], m["num_bands"],
             m["threshold"], m["min_ngram_size"], m["seed"],
             id_type, sig_type, column, id_col,
         ),
+        _META,
     )
 
 
@@ -225,11 +202,7 @@ def extend_dedup_index(
         df.select(id_col, column), column, id_col,
         _params_from_meta(meta),
     )
-    cluster_for_partitioned_write(bands, ["band"], F.col("sig")).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("band").parquet(
-        f"{index_path}/bands/batch={batch_id}"
-    )
+    _write_artifact(bands, index_path, "bands", batch_id, "band", "sig")
     # commit marker LAST: a crashed delivery stays invisible to probes
     ledger_commit(spark, index_path, batch_id)
 
@@ -247,47 +220,7 @@ def delete_from_dedup_index(
     an id-level operation: one ledger-committed tombstone set that probes
     anti-join before the (band, sig) keys are formed; no additive state to
     adjust.  Compaction makes it physical and clears the set."""
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "bands", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    want = ids.select(
-        F.col(ids.columns[0]).cast(meta.id_type).alias("doc")
-    ).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, meta.id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        want = want.localCheckpoint(eager=True)  # write overwrites a read root
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
-
-
-def _committed_bands(
-    spark, index_path: str, meta, committed: list[str] | None = None
-) -> DataFrame:
-    """Committed, non-tombstoned (id, band, sig) store postings.
-
-    ``committed`` lets the compactor pass its ONE ledger snapshot through
-    (r15 review): a delivery committing between two independent ledger
-    listings would otherwise be folded into the rewritten base without
-    being marked spent in the folded manifest."""
-    if committed is None:
-        committed = _committed_batches(spark, index_path)
-    ref = (
-        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-        .parquet(f"{index_path}/bands")
-        .filter(F.col("batch").isin(committed))
-    )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        ref = ref.join(tomb.withColumnRenamed("doc", "id"), "id", "left_anti")
-    return ref
+    _deliver_tombstones(spark, index_path, ids, batch_id, "bands")
 
 
 def filter_against_dedup_index(
@@ -307,7 +240,16 @@ def filter_against_dedup_index(
     meta = read_meta_row(spark, index_path)
     column = column or meta.text_col
     id_col = id_col or meta.id_col
-    ref_keys = _committed_bands(spark, index_path, meta).select("band", "sig").distinct()
+    committed = _committed_batches(spark, index_path)
+    ref = (
+        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
+        .parquet(f"{index_path}/bands")
+        .filter(F.col("batch").isin(committed))
+    )
+    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    if tomb is not None:
+        ref = ref.join(tomb.withColumnRenamed("doc", "id"), "id", "left_anti")
+    ref_keys = ref.select("band", "sig").distinct()
     nb = _bands_for(
         new_df.select(id_col, column), column, id_col, _params_from_meta(meta)
     )
@@ -329,27 +271,20 @@ def compact_dedup_index(spark, index_path: str, dst_index: str | None = None) ->
     (``retrieval.swap_index_alias`` works here too — resolution only needs
     the root's meta)."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    bands = _committed_bands(spark, index_path, meta, committed).select(
-        "id", "sig", "band"
-    )
-    if dst_index is None:
-        bands = bands.localCheckpoint(eager=True)
-        dst_index = index_path
-    # spent-id manifest BEFORE the rewrite (see retrieval.folded_record)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    _write_dedup_base(
-        spark,
-        dst_index,
-        bands,
-        (
-            meta.family, int(meta.ngram_size), int(meta.num_perm),
-            int(meta.num_bands), float(meta.threshold),
-            int(meta.min_ngram_size), int(meta.seed),
-            meta.id_type, meta.sig_type, meta.text_col, meta.id_col,
-        ),
-        clear_folded=False,
-    )
+
+    def load(committed: list[str]) -> dict:
+        bands = (
+            spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
+            .parquet(f"{index_path}/bands")
+            .filter(F.col("batch").isin(committed))
+            .select("id", "sig", "band")
+        )
+        return {"bands": (bands, "id")}
+
+    def write(root: str, f: dict) -> None:
+        _write_artifact(f["bands"], root, "bands", "base", "band", "sig")
+
+    _fold_compact(spark, index_path, dst_index, meta, ("bands",), _META, load, write)
 
 
 def dedup_store_health(spark, index_path: str) -> DataFrame:
@@ -368,31 +303,7 @@ def dedup_store_health(spark, index_path: str) -> DataFrame:
     Scale shape: one map-side-combined count agg over the postings plus an
     id-sized tombstone count; O(batches) output rows."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    bands = (
-        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-        .parquet(f"{index_path}/bands")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.countDistinct("id").cast("long").alias("n_ids"),
-        )
-    )
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    if fs.exists(tpath):
-        tombs = (
-            spark.read.schema(f"doc {meta.id_type}")
-            .parquet(f"{index_path}/tombstones")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(F.count("*").cast("long").alias("n_tombstones"))
-        )
-    else:
-        from chat_data_pipeline_spark.session import values_df
-
-        tombs = values_df(spark, [], "batch string, n_tombstones long")
-    out = bands.join(tombs, "batch", "full_outer")
-    return out.fillna(
-        {"n_rows": 0, "n_ids": 0, "n_tombstones": 0}
-    ).orderBy("batch")
+    return _batch_health(spark, index_path, meta, [
+        ("bands", f"id {meta.id_type}, sig {meta.sig_type}",
+         [F.count("*"), F.countDistinct("id")], ["n_rows", "n_ids"]),
+    ])

@@ -23,6 +23,8 @@ engine-extension surface like the stores themselves.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -71,6 +73,94 @@ DEFAULT_GC_GRACE_SECONDS = 86_400
 # batch-partitioned artifact subtrees (the lease dir is skipped by its
 # "_" prefix)
 _CONTROL_DIRS = frozenset({"meta", "batches", "folded"})
+
+
+class StoreKind(NamedTuple):
+    """What is specific to one persisted store kind; every protocol step
+    around it (tombstone delivery, compaction fold, health, lease, CLI and
+    stream dispatch) is written once.  Verbs are function names in
+    ``chat_data_pipeline_spark.operators.<module>`` (see :func:`store_verb`)."""
+
+    module: str
+    build: str
+    extend: str
+    delete: str
+    compact: str
+    rebuild: str | None  # None: the kind has no rebuild verb
+    # the residency artifact: one id row (or a known multiple) per stored
+    # unit, positive deliveries only — deletes write none of these; an id
+    # column of None means the meta's ``id_col``
+    residency: tuple[str, str | None]
+    # delivered rows: (id, vector) from the curated rows or `dataset:`,
+    # else (id, text) from the curated rows
+    vectors: bool
+    payload_arg: str  # the build/extend keyword naming the text/vector column
+    # `index.<kind>` YAML key -> (cast, default) for build / rebuild; a None
+    # default means "unset or falsy passes None"
+    build_params: dict
+    rebuild_params: dict
+    rebuild_reads_source: bool  # the rebuild re-encodes a supplied corpus
+
+
+_IVF_BUILD = {"n_centroids": (int, 16), "dim": (int, 64)}
+STORE_KINDS = {
+    "bm25": StoreKind(
+        "retrieval", "build_text_index", "extend_text_index",
+        "delete_from_text_index", "compact_text_index", None,
+        ("doclens", "doc"), False, "text_col", {}, {}, False,
+    ),
+    "ivf": StoreKind(
+        "similarity", "build_ivf_index", "extend_ivf_index",
+        "delete_from_ivf_index", "compact_ivf_index", "rebuild_ivf_index",
+        ("postings", None), True, "vec_col",
+        {**_IVF_BUILD, "coarse": (str, "md5"), "seed": (int, 42)},
+        {"n_centroids": (int, None), "seed": (int, 42)}, False,
+    ),
+    "ivfpq": StoreKind(
+        "similarity", "build_ivfpq_index", "extend_ivfpq_index",
+        # deletes and compaction are flavor-agnostic across the IVF family
+        "delete_from_ivf_index", "compact_ivf_index", "rebuild_ivfpq_index",
+        ("postings", None), True, "vec_col",
+        {**_IVF_BUILD, "m": (int, 8), "n_codewords": (int, 16)},
+        {"n_centroids": (int, None), "m": (int, None), "n_codewords": (int, None)},
+        True,
+    ),
+    "dedup": StoreKind(
+        "dedup_store", "build_dedup_index", "extend_dedup_index",
+        "delete_from_dedup_index", "compact_dedup_index", None,
+        ("bands", "id"), False, "column",
+        {
+            "family": (str, "md5"), "ngram_size": (int, 5),
+            "num_perm": (int, 16), "num_bands": (int, 4),
+            "threshold": (float, 0.7), "min_ngram_size": (int, 5),
+            "seed": (int, 42),
+        },
+        {}, False,
+    ),
+    "neardup": StoreKind(
+        "neardup_store", "build_neardup_index", "extend_neardup_index",
+        "delete_from_neardup_index", "compact_neardup_index", None,
+        ("vectors", "id"), True, "vec_col",
+        {
+            # None = the corpus-scaled occupancy rule (build_neardup_index)
+            "n_planes": (int, None), "n_tables": (int, 4), "dim": (int, 64),
+            "threshold": (float, 0.45),
+        },
+        {}, False,
+    ),
+}
+
+
+def store_verb(kind: str, verb: str):
+    """The function implementing ``verb`` (a :class:`StoreKind` field:
+    build / extend / delete / compact / rebuild) for a store kind."""
+    import importlib
+
+    spec = STORE_KINDS[kind]
+    module = importlib.import_module(
+        f"chat_data_pipeline_spark.operators.{spec.module}"
+    )
+    return getattr(module, getattr(spec, verb))
 
 
 def store_kind_and_meta(spark, index_path: str):
@@ -198,6 +288,7 @@ def maintenance_plan_values(
     from chat_data_pipeline_spark.operators.retrieval import (
         _committed_batches,
         _fs_for,
+        _store_id_type,
         _tombstoned_ids,
     )
 
@@ -210,31 +301,10 @@ def maintenance_plan_values(
     committed = _committed_batches(spark, index_path)
     n_batches = len(committed)
 
-    if kind in ("bm25", "dedup", "neardup"):
-        id_type = meta.id_type
-    else:
-        # ivf/ivfpq metas pin id_type since r15; pre-r15 roots fall back
-        # to inferring it from the BASE partition only — inferring over
-        # the whole postings tree would touch the footers of a crashed
-        # uncommitted delivery's partial files (the exact hazard the
-        # explicit-schema reads below guard against; the base is complete
-        # by construction, its commit marker being the meta write)
-        id_type = meta.asDict().get("id_type") or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col]
+    id_type = _store_id_type(spark, index_path, meta)
     tomb = _tombstoned_ids(spark, index_path, id_type, committed)
-
-    # the residency artifact: one id row (or a known multiple) per stored
-    # unit, positive deliveries only — deletes write none of these
-    res_sub, res_id = {
-        "bm25": ("doclens", "doc"),
-        "dedup": ("bands", "id"),
-        "neardup": ("vectors", "id"),
-        "ivf": ("postings", None),
-        "ivfpq": ("postings", None),
-    }[kind]
-    if res_id is None:
-        res_id = meta.id_col
+    res_sub, res_id = STORE_KINDS[kind].residency
+    res_id = res_id or meta.id_col
 
     # residency artifact loaded with an explicit single-column schema (the
     # probe paths' discipline): a crashed uncommitted delivery's partial
@@ -856,28 +926,5 @@ def compact_if_needed(
     )
     if not plan.compact_recommended:
         return False
-    if plan.kind == "bm25":
-        from chat_data_pipeline_spark.operators.retrieval import (
-            compact_text_index,
-        )
-
-        compact_text_index(spark, index_path, dst_index=dst_index)
-    elif plan.kind == "dedup":
-        from chat_data_pipeline_spark.operators.dedup_store import (
-            compact_dedup_index,
-        )
-
-        compact_dedup_index(spark, index_path, dst_index=dst_index)
-    elif plan.kind == "neardup":
-        from chat_data_pipeline_spark.operators.neardup_store import (
-            compact_neardup_index,
-        )
-
-        compact_neardup_index(spark, index_path, dst_index=dst_index)
-    else:
-        from chat_data_pipeline_spark.operators.similarity import (
-            compact_ivf_index,
-        )
-
-        compact_ivf_index(spark, index_path, dst_index=dst_index)
+    store_verb(plan.kind, "compact")(spark, index_path, dst_index=dst_index)
     return True

@@ -42,20 +42,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators.retrieval import (
+    _batch_health,
     _committed_batches,
-    read_meta_row,
-    _fold_manifest_forward,
-    _fs_for,
+    _deliver_tombstones,
+    _fold_compact,
     _guard_batch_id_kind,
     _guard_delivery_id_type,
     _guard_spent_batch_id,
     _guard_tombstoned_delivery,
     _tombstoned_ids,
-    cluster_for_partitioned_write,
+    _write_artifact,
+    _write_store_base,
     committed_tree,
-    invalidate_index_meta,
     ledger_commit,
-    ledger_reset,
+    read_meta_row,
     validate_batch_id,
 )
 from chat_data_pipeline_spark.operators.similarity import srp_md5_sign_planes
@@ -113,7 +113,7 @@ def _postings_and_vectors(
 
 
 def _write_batch(
-    index_path: str, batch_dir: str, posting: DataFrame, vectors: DataFrame
+    index_path: str, batch_id: str, posting: DataFrame, vectors: DataFrame
 ) -> None:
     # both frames derive from the eagerly-checkpointed verify-vector base
     # (_postings_and_vectors), and the two writes target disjoint paths —
@@ -121,21 +121,19 @@ def _write_batch(
     # commit markers stay strictly after both complete
     from concurrent.futures import ThreadPoolExecutor
 
-    def _w_post():
-        cluster_for_partitioned_write(posting, ["t"], F.col("b")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy("t").parquet(
-            f"{index_path}/postings/{batch_dir}"
-        )
-
-    def _w_vec():
-        vectors.write.mode("overwrite").parquet(
-            f"{index_path}/vectors/{batch_dir}"
-        )
-
     with ThreadPoolExecutor(max_workers=2) as ex:
-        for f in (ex.submit(_w_post), ex.submit(_w_vec)):
+        for f in (
+            ex.submit(_write_artifact, posting, index_path, "postings", batch_id, "t", "b"),
+            ex.submit(_write_artifact, vectors, index_path, "vectors", batch_id),
+        ):
             f.result()
+
+
+_SUBTREES = ("postings", "vectors")
+_META = (
+    "n_planes int, n_tables int, dim int, threshold double, "
+    "id_type string, id_col string, vec_col string"
+)
 
 
 def build_neardup_index(
@@ -185,30 +183,17 @@ def build_neardup_index(
         n_planes = 4 + max(0, int(math.floor(math.log2(max(n, 1) / 500.0))))
     buckets = _srp_bucket_udf(int(n_planes), int(n_tables), int(dim))
     posting = base.select("id", F.posexplode(buckets(F.col("v"))).alias("t", "b"))
-    vectors = base
-    invalidate_index_meta(spark, index_path)
-    # a REBUILD clears stale extension batches, tombstones and the
-    # spent-id manifest inside the meta-less window (probes reject the
-    # root until meta lands LAST; a fresh world makes old ids reusable)
-    for _sub in ("postings", "vectors", "tombstones", "folded"):
-        _fs, _p, _jvm = _fs_for(spark, f"{index_path}/{_sub}")
-        _fs.delete(_p, True)
-    # the batch level is the hive DIRECTORY (batch=base), same as every
-    # extension delivery — one read of postings/ sees base + extensions
-    _write_batch(index_path, "batch=base", posting, vectors)
-    ledger_reset(spark, index_path)
-    id_type = dict(df.dtypes)[id_col]
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
+    _write_store_base(
         spark,
-        [(
+        index_path,
+        _SUBTREES,
+        lambda root: _write_batch(root, "base", posting, base),
+        (
             int(n_planes), int(n_tables), int(dim), float(threshold),
-            id_type, id_col, vec_col,
-        )],
-        "n_planes int, n_tables int, dim int, threshold double, "
-        "id_type string, id_col string, vec_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+            dict(df.dtypes)[id_col], id_col, vec_col,
+        ),
+        _META,
+    )
 
 
 def extend_neardup_index(
@@ -252,7 +237,7 @@ def extend_neardup_index(
         df, meta.id_col, meta.vec_col,
         int(meta.n_planes), int(meta.n_tables), int(meta.dim),
     )
-    _write_batch(index_path, f"batch={batch_id}", posting, vectors)
+    _write_batch(index_path, batch_id, posting, vectors)
     ledger_commit(spark, index_path, batch_id)
 
 
@@ -266,25 +251,7 @@ def delete_from_neardup_index(
     subtracting semantic near-copies of content that no longer exists.
     Same ledger-committed id-set shape as the other stores' deletes; no
     additive state to adjust; compaction makes it physical."""
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    want = ids.select(
-        F.col(ids.columns[0]).cast(meta.id_type).alias("doc")
-    ).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, meta.id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        want = want.localCheckpoint(eager=True)
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
+    _deliver_tombstones(spark, index_path, ids, batch_id, "postings")
 
 
 def compact_neardup_index(
@@ -296,48 +263,24 @@ def compact_neardup_index(
     (checkpoint-pinned) vs write-then-swap (``dst_index``) split as the
     other stores' compactors."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    posting = (
-        committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select("id", "t", "b")
-    )
-    vectors = (
-        committed_tree(spark, index_path, "vectors")
-        .filter(F.col("batch").isin(committed))
-        .select("id", "v")
-    )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        dead = tomb.withColumnRenamed("doc", "id")
-        posting = posting.join(dead, "id", "left_anti")
-        vectors = vectors.join(dead, "id", "left_anti")
-    if dst_index is None:
-        posting = posting.localCheckpoint(eager=True)
-        vectors = vectors.localCheckpoint(eager=True)
-        dst_index = index_path
-    # spent-id manifest BEFORE the rewrite (see retrieval.folded_record)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    invalidate_index_meta(spark, dst_index)
-    # stale extension dirs + tombstones cleared inside the meta-less
-    # window (the in-place inputs are pinned by the eager checkpoints;
-    # the folded manifest written above survives — it must)
-    for _sub in ("postings", "vectors", "tombstones"):
-        _fs, _p, _jvm = _fs_for(spark, f"{dst_index}/{_sub}")
-        _fs.delete(_p, True)
-    _write_batch(dst_index, "batch=base", posting, vectors)
-    ledger_reset(spark, dst_index)
-    from chat_data_pipeline_spark.session import values_df
 
-    values_df(
-        spark,
-        [(
-            int(meta.n_planes), int(meta.n_tables), int(meta.dim),
-            float(meta.threshold), meta.id_type, meta.id_col, meta.vec_col,
-        )],
-        "n_planes int, n_tables int, dim int, threshold double, "
-        "id_type string, id_col string, vec_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
+    def load(committed: list[str]) -> dict:
+        def tree(sub: str, *cols: str) -> DataFrame:
+            return (
+                committed_tree(spark, index_path, sub)
+                .filter(F.col("batch").isin(committed))
+                .select(*cols)
+            )
+
+        return {
+            "postings": (tree("postings", "id", "t", "b"), "id"),
+            "vectors": (tree("vectors", "id", "v"), "id"),
+        }
+
+    def write(root: str, f: dict) -> None:
+        _write_batch(root, "base", f["postings"], f["vectors"])
+
+    _fold_compact(spark, index_path, dst_index, meta, _SUBTREES, _META, load, write)
 
 
 def matched_against_neardup_index(
@@ -492,35 +435,7 @@ def neardup_store_health(spark, index_path: str) -> DataFrame:
     metadata + vector rows) plus an id-sized tombstone count; O(batches)
     output rows."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    posts = (
-        spark.read.schema(f"id {meta.id_type}, b long")
-        .parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(F.count("*").cast("long").alias("n_rows"))
-    )
-    vecs = (
-        spark.read.schema(f"id {meta.id_type}")
-        .parquet(f"{index_path}/vectors")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(F.count("*").cast("long").alias("n_ids"))
-    )
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    if fs.exists(tpath):
-        tombs = (
-            spark.read.schema(f"doc {meta.id_type}")
-            .parquet(f"{index_path}/tombstones")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(F.count("*").cast("long").alias("n_tombstones"))
-        )
-    else:
-        from chat_data_pipeline_spark.session import values_df
-
-        tombs = values_df(spark, [], "batch string, n_tombstones long")
-    out = posts.join(vecs, "batch", "full_outer").join(tombs, "batch", "full_outer")
-    return out.fillna(
-        {"n_rows": 0, "n_ids": 0, "n_tombstones": 0}
-    ).orderBy("batch")
+    return _batch_health(spark, index_path, meta, [
+        ("postings", f"id {meta.id_type}, b long", [F.count("*")], ["n_rows"]),
+        ("vectors", f"id {meta.id_type}", [F.count("*")], ["n_ids"]),
+    ])

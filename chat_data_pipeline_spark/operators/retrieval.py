@@ -271,46 +271,14 @@ def build_text_index(
         "n_docs long, sum_dl long",
     )
     id_type = dict(docs.dtypes)[id_col]
-    # salt the bucket-clustered writes so the corpus-sized postings table is
-    # written by O(N_TERM_BUCKETS × WRITE_SALT) tasks, not ≤64 (see
-    # WRITE_SALT above); the salt hashes the term so a bucket's rows spread
-    # over ≤ WRITE_SALT tasks → ≤ WRITE_SALT files per bkt dir.
-    # partitionOverwriteMode is pinned STATIC per-write: under a session
-    # configured dynamic, a base rebuild would replace only batch=base and
-    # probes would silently keep serving stale extension batches (and a
-    # replayed extension would keep stale bkt dirs its new content no
-    # longer produces).
-    p_out = cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
-    if _clear:  # base build: write through the root, clearing old batches
-        _write_text_base(spark, index_path, p_out, d_out, stats, dlens, id_type)
+    if _clear:  # base build: every old batch is cleared in the meta-less window
+        _write_store_base(
+            spark, index_path, _TEXT_SUBTREES,
+            lambda root: _write_text_batch(root, "base", postings, dfreq, stats, dlens),
+            (id_type, N_TERM_BUCKETS), _TEXT_META,
+        )
     else:  # extension: overwrite only this delivery's partition
-        # the four artifact writes target disjoint paths and share only
-        # already-materialized checkpoints — run them concurrently (r17);
-        # the ledger commit stays strictly AFTER all four complete
-        def _w_post():
-            p_out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("bkt").parquet(f"{index_path}/postings/batch={batch_id}")
-
-        def _w_dfreq():
-            d_out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("bkt").parquet(f"{index_path}/dfreq/batch={batch_id}")
-
-        def _w_stats():
-            stats.write.mode("overwrite").parquet(
-                f"{index_path}/stats/batch={batch_id}"
-            )
-
-        def _w_dlens():
-            dlens.write.mode("overwrite").parquet(
-                f"{index_path}/doclens/batch={batch_id}"
-            )
-
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            for f in [ex.submit(w) for w in (_w_post, _w_dfreq, _w_stats, _w_dlens)]:
-                f.result()
+        _write_text_batch(index_path, batch_id, postings, dfreq, stats, dlens)
         # the delivery's commit marker is written LAST: a crash mid-delivery
         # (postings landed, df/stats didn't) must leave the batch INVISIBLE
         # to probes — BM25's exactness claim depends on the three artifacts
@@ -318,6 +286,58 @@ def build_text_index(
         # half-delivered batch can't silently skew df against tf.  Replay
         # with the same id overwrites the partial artifacts and re-commits.
         ledger_commit(spark, index_path, batch_id)
+
+
+_TEXT_SUBTREES = ("postings", "dfreq", "stats", "doclens")
+_TEXT_META = "id_type string, n_term_buckets int"
+
+
+def _write_artifact(
+    df: DataFrame, root: str, sub: str, batch_id: str,
+    part: str | None = None, salt_col: str | None = None,
+) -> None:
+    """One batch of one store artifact.  A ``part``-partitioned artifact is
+    written salted and ``part``-clustered (see
+    :func:`cluster_for_partitioned_write`): a corpus-sized table is written
+    by O(dirs × WRITE_SALT) tasks, not ≤ #dirs, into ≤ WRITE_SALT files per
+    dir.  The ``base`` batch is written THROUGH the sub-tree root,
+    partitioned by ``batch``; a delivery overwrites only its own
+    ``batch=<id>`` dir.  partitionOverwriteMode is pinned STATIC per-write:
+    under a session configured dynamic, a replayed delivery would keep
+    stale ``part=`` dirs its new content no longer produces."""
+    path, cols = f"{root}/{sub}", [part] if part else []
+    if part:
+        df = cluster_for_partitioned_write(df, [part], F.col(salt_col))
+    if batch_id == "base":
+        df, cols = df.withColumn("batch", F.lit("base")), ["batch", *cols]
+    else:
+        path = f"{path}/batch={batch_id}"
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    (writer.partitionBy(*cols) if cols else writer).parquet(path)
+
+
+def _write_text_batch(
+    index_path: str, batch_id: str, postings: DataFrame, dfreq: DataFrame,
+    stats: DataFrame, dlens: DataFrame,
+) -> None:
+    """The four BM25 artifacts of one batch (``base`` or a delivery).  They
+    land at disjoint paths from already-materialized inputs, so they are
+    written concurrently (r17, guide §2.6); the caller's ledger/meta commit
+    marker lands strictly after all four."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    writes = (
+        (postings, "postings", "bkt", "term"),
+        (dfreq, "dfreq", "bkt", "term"),
+        (stats, "stats", None, None),
+        (dlens, "doclens", None, None),
+    )
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        for f in [
+            ex.submit(_write_artifact, df, index_path, sub, batch_id, part, salt)
+            for df, sub, part, salt in writes
+        ]:
+            f.result()
 
 
 def read_meta_row(spark, index_path: str):
@@ -328,7 +348,7 @@ def read_meta_row(spark, index_path: str):
     fsck/gc/plan chain) starts with exactly this read, so a 5-root fleet
     sweep paid 10 jobs before touching any real artifact.  The meta file
     is one row of flat scalars by construction of all five store writers
-    (``values_df(...).repartition(1)``), so for local roots the part file
+    (``values_df(...).coalesce(1)``), so for local roots the part file
     is read driver-side via pyarrow and wrapped in a ``Row`` with the same
     field order and Python value types the Spark path produced.
 
@@ -385,67 +405,93 @@ def invalidate_index_meta(spark, index_path: str) -> None:
     fs.delete(path, True)
 
 
-def _write_text_base(
-    spark, index_path: str, p_out: DataFrame, d_out: DataFrame,
-    stats: DataFrame, dlens: DataFrame, id_type: str,
-    clear_folded: bool = True,
-) -> None:
-    """Write the four base artifacts through the root (clearing stale
-    extension batches), reset the commit ledger, then write meta LAST as
-    the build's commit marker (same order as build_ivf_index): meta is
-    deleted FIRST (see :func:`invalidate_index_meta`), so a build OR
-    REBUILD that dies midway leaves no meta at all and a probe of the
-    partial root fails loudly instead of reading postings that disagree
-    with stale meta/ledger state.  meta also carries the id type so probes
-    supply EXPLICIT schemas — no footer sampling at read time (on a
-    million-file index, schema inference would open an arbitrary footer
-    per read).
-
-    Tombstones are cleared inside the same meta-less window: a fresh base
-    (or a compaction, which physically drops the tombstoned docs before
-    calling here) starts with no pending deletes by definition, and a
-    crash between the tombstone wipe and the meta write leaves a root
-    probes reject loudly rather than one silently serving un-deleted
-    rows."""
-    invalidate_index_meta(spark, index_path)
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    fs.delete(tpath, True)
-    if clear_folded:
-        # a from-source rebuild starts a new world: old delivery ids are
-        # reusable; a COMPACTION passes clear_folded=False to keep the
-        # spent-id manifest it just wrote
-        folded_clear(spark, index_path)
-    base = F.lit("base")
-    # the four base artifacts land at disjoint paths from already-
-    # materialized checkpoints — write them concurrently (r17, guide §2.6);
-    # crash consistency is unchanged because the whole window is meta-less
-    # (meta deleted above, rewritten LAST below), so partial concurrent
-    # writes leave a root every probe rejects loudly, same as before
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _w(df, sub: str, bucketed: bool):
-        part_cols = ["batch", "bkt"] if bucketed else ["batch"]
-        df.withColumn("batch", base).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy(*part_cols).parquet(f"{index_path}/{sub}")
-
-    jobs = [
-        (p_out, "postings", True),
-        (d_out, "dfreq", True),
-        (stats, "stats", False),
-        (dlens, "doclens", False),
-    ]
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        for f in [ex.submit(_w, df, sub, b) for df, sub, b in jobs]:
-            f.result()
-    ledger_reset(spark, index_path)
+def _write_meta(spark, root: str, row, schema: str) -> None:
+    """Write a store's one-row meta — the base's commit marker, always the
+    LAST write of a (re)build.  ``row`` is a tuple in ``schema`` order, or
+    a dict (a compaction copying its source meta forward by field name).
+    VALUES-backed (r17): the parallelize path pays a Python-worker round
+    trip per write; coalesce(1) keeps one file without an exchange (r18)."""
     from chat_data_pipeline_spark.session import values_df
 
-    # meta via the JVM-local VALUES constructor (r17): the parallelize
-    # path pays a Python-worker round trip per write — one per BUILD
-    values_df(
-        spark, [(id_type, N_TERM_BUCKETS)], "id_type string, n_term_buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    if isinstance(row, dict):
+        row = tuple(row[c.split()[0]] for c in schema.split(","))
+    values_df(spark, [row], schema).coalesce(1).write.mode("overwrite").parquet(
+        f"{root}/meta"
+    )
+
+
+def _write_store_base(
+    spark, root: str, subtrees: tuple, write, meta_row, meta_schema: str,
+    clear_folded: bool = True,
+) -> None:
+    """The base (re)write window every store kind shares — each build, and
+    through :func:`_fold_compact` each compaction:
+
+    1. meta deleted FIRST (see :func:`invalidate_index_meta`): from here to
+       step 5 the root is meta-less, so a build OR rebuild that dies midway
+       leaves a root every probe rejects loudly instead of one whose
+       postings disagree with stale meta/ledger state;
+    2. the kind's artifact ``subtrees`` are cleared (stale extension
+       batches and crash debris go with them), and so are the tombstones —
+       a fresh base, or a compaction that just made its deletes physical,
+       has no pending deletes by definition.  ``clear_folded`` also clears
+       the spent-id manifest: a from-source build starts a new world where
+       old delivery ids are reusable; a compaction or rebuild passes False
+       to keep the manifest it wrote just before;
+    3. ``write(root)`` lands the base artifacts under ``batch=base``;
+    4. the commit ledger resets (the base itself is committed by the meta);
+    5. meta is written LAST.  It carries the id type, so probes supply
+       EXPLICIT schemas — no footer sampling at read time."""
+    invalidate_index_meta(spark, root)
+    for sub in (*subtrees, "tombstones", *(("folded",) if clear_folded else ())):
+        fs, path, _jvm = _fs_for(spark, f"{root}/{sub}")
+        fs.delete(path, True)
+    write(root)
+    ledger_reset(spark, root)
+    _write_meta(spark, root, meta_row, meta_schema)
+
+
+def _fold_compact(
+    spark, index_path: str, dst_index: str | None, meta, subtrees: tuple,
+    meta_schema: str, load, write,
+) -> None:
+    """The ONE compaction sequence of every store kind; the kind supplies
+    only ``load(committed)`` — ``{name: (frame, id column or None)}`` over
+    the committed batches — and ``write(root, frames)``, its base write.
+
+    One ledger snapshot feeds both the load and the folded manifest (r15
+    review: a delivery committing between two listings would be folded
+    into the base without being marked spent).  Tombstoned ids are
+    anti-joined out of every frame with an id column — compaction is where
+    deletes become PHYSICAL.  ``dst_index=None`` compacts IN PLACE: every
+    frame is pinned with an eager localCheckpoint first (Spark cannot
+    overwrite a path it is lazily reading), which materializes the store
+    to executor-local disk — fine at single-node scale.  A 100 TB
+    deployment passes ``dst_index``: the compaction streams into a FRESH
+    root with no checkpoint and the caller swaps probes over
+    (:func:`swap_index_alias`).  The folded manifest lands BEFORE the
+    rewrite, so a delivery this compaction folds reads as spent from the
+    moment the compacted base serves (see :func:`folded_record`); that is
+    safe even if the rewrite crashes, because the marked batches are still
+    ledger-committed in the old root.  Then :func:`_write_store_base` runs
+    the meta-less window, and the source meta is copied forward last (with
+    the resolved id type, which a pre-r15 IVF meta lacks)."""
+    committed = _committed_batches(spark, index_path)
+    id_type = _store_id_type(spark, index_path, meta)
+    tomb = _tombstoned_ids(spark, index_path, id_type, committed)
+    frames = {}
+    for name, (df, id_col) in load(committed).items():
+        if tomb is not None and id_col:
+            df = df.join(tomb.withColumnRenamed("doc", id_col), id_col, "left_anti")
+        frames[name] = df
+    if dst_index is None:
+        frames = {n: f.localCheckpoint(eager=True) for n, f in frames.items()}
+        dst_index = index_path
+    _fold_manifest_forward(spark, index_path, dst_index, committed)
+    _write_store_base(
+        spark, dst_index, subtrees, lambda root: write(root, frames),
+        {**meta.asDict(), "id_type": id_type}, meta_schema, clear_folded=False,
+    )
 
 
 def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> None:
@@ -465,61 +511,49 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
     (write-then-swap, the zero-downtime pattern — :func:`swap_index_alias`
     is that pointer as an operator)."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .select("doc", "dl", "term", "tf", "bkt")
-    )
-    dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
-        .groupBy("bkt", "term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        # a fully-deleted term nets to df=0 (its positive build/extension
-        # rows exactly cancel its negative delete rows); drop the husk
-        .filter(F.col("df") > 0)
-    )
-    dlens = (
-        spark.read.schema(f"doc {meta.id_type}, dl int")
-        .parquet(f"{index_path}/doclens")
-        .filter(F.col("batch").isin(committed))
-        .select("doc", "dl")
-    )
-    if tomb is not None:
-        # compaction is where deletes become PHYSICAL: tombstoned docs are
-        # dropped from the rewritten postings/doclens, their negative
-        # df/stats rows cancel in the net sums above, and _write_text_base
-        # clears the tombstone set itself — after which a previously
-        # deleted id may be re-delivered
-        postings = postings.join(tomb, "doc", "left_anti")
-        dlens = dlens.join(tomb, "doc", "left_anti")
-    if dst_index is None:
-        postings = postings.localCheckpoint(eager=True)
-        dfreq = dfreq.localCheckpoint(eager=True)
-        dlens = dlens.localCheckpoint(eager=True)
-        dst_index = index_path
-    # recomputed from the RETAINED doc rows rather than netting the stats
-    # partitions — equal by the extend-guard invariant, but this derivation
-    # is correct unconditionally
-    stats = dlens.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    p_out = cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
-    # the folded manifest lands BEFORE the rewrite: a delivery this
-    # compaction folds must read as spent from the moment the compacted
-    # base serves (see folded_record — closes the streaming replay
-    # double-count window); safe even if the rewrite crashes, because the
-    # marked batches are still ledger-committed in the old root
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    _write_text_base(
-        spark, dst_index, p_out, d_out, stats, dlens, meta.id_type,
-        clear_folded=False,
+
+    def read(sub: str, schema: str, committed: list[str]) -> DataFrame:
+        return (
+            spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+            .filter(F.col("batch").isin(committed))
+        )
+
+    def load(committed: list[str]) -> dict:
+        p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
+        dfreq = (
+            read("dfreq", "term string, df long", committed)
+            .groupBy("bkt", "term")
+            .agg(F.sum("df").cast("long").alias("df"))
+            # a fully-deleted term nets to df=0 (its positive build/extension
+            # rows exactly cancel its negative delete rows); drop the husk
+            .filter(F.col("df") > 0)
+        )
+        # tombstoned docs drop out of postings/doclens; their negative
+        # df/stats rows cancel in the net sums
+        return {
+            "postings": (
+                read("postings", p_schema, committed)
+                .select("doc", "dl", "term", "tf", "bkt"), "doc",
+            ),
+            "dfreq": (dfreq, None),
+            "doclens": (
+                read("doclens", f"doc {meta.id_type}, dl int", committed)
+                .select("doc", "dl"), "doc",
+            ),
+        }
+
+    def write(root: str, f: dict) -> None:
+        # recomputed from the RETAINED doc rows rather than netting the stats
+        # partitions — equal by the extend-guard invariant, but this
+        # derivation is correct unconditionally
+        stats = f["doclens"].agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
+        )
+        _write_text_batch(root, "base", f["postings"], f["dfreq"], stats, f["doclens"])
+
+    _fold_compact(
+        spark, index_path, dst_index, meta, _TEXT_SUBTREES, _TEXT_META, load, write
     )
 
 
@@ -700,51 +734,82 @@ def delete_from_text_index(
     anti-join against the tombstone set (AQE broadcasts it while small).
     Compaction is the pressure valve: it drops tombstoned docs physically
     and clears the set."""
+
+    def negatives(want: DataFrame, committed: list[str], id_type: str, bid: str):
+        def victims(sub: str, schema: str) -> DataFrame:
+            return (
+                spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+                .filter(F.col("batch").isin(committed))
+                .join(want, "doc", "left_semi")
+            )
+
+        neg_df = victims(
+            "postings", f"doc {id_type}, dl int, term string, tf long"
+        ).groupBy("bkt", "term").agg((-F.count("*")).cast("long").alias("df"))
+        neg_stats = victims("doclens", f"doc {id_type}, dl int").agg(
+            (-F.count("*")).cast("long").alias("n_docs"),
+            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("sum_dl"),
+        )
+        _write_artifact(neg_df, index_path, "dfreq", bid, "bkt", "term")
+        _write_artifact(neg_stats, index_path, "stats", bid)
+
+    _deliver_tombstones(spark, index_path, ids, batch_id, "postings", negatives)
+
+
+def _store_id_type(spark, index_path: str, meta) -> str:
+    """The store's id column type.  Every store's meta pins ``id_type``
+    (IVF/IVF-PQ since r15); a pre-r15 IVF root falls back to the BASE
+    partition's footer.  Inferring over the whole postings tree would read
+    the footers of a crashed uncommitted delivery's partial files; the
+    base is complete by construction, its commit marker being the meta
+    write."""
+    return meta.asDict().get("id_type") or dict(
+        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
+    )[meta.id_col]
+
+
+def _deliver_tombstones(
+    spark, index_path: str, ids: DataFrame, batch_id: int | str,
+    resident_sub: str, negatives=None,
+) -> None:
+    """The ONE tombstone delivery behind every store kind's delete: ``ids``
+    (first column) lands as a ledger-committed id set under
+    ``tombstones/batch=<id>`` that probes anti-join and compaction makes
+    physical.
+
+    Sequence: the spent-id guard (a folded same-kind replay is a no-op) →
+    the cross-kind guard against the kind's ``resident_sub`` artifact (an
+    id that names an extension must not be reused by a delete) → the
+    victim set minus ids an EARLIER delete already tombstoned (this
+    batch's own previous commit is excluded, so a replay recomputes the
+    same victims; overlapping deletes never double-subtract) → the kind's
+    ``negatives(want, committed, id_type, batch_id)`` writes, if any (BM25
+    subtracts its integer-additive globals) → the tombstone write → the
+    ledger commit LAST, so a crash anywhere above leaves the delete
+    invisible to probes and a replay overwrites its own partitions."""
     batch_id = validate_batch_id(batch_id)
     if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
         return  # folded replay: the victims are already physically gone
     _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
+        spark, index_path, batch_id, resident_sub, "delete", "extension"
     )
     meta = read_meta_row(spark, index_path)
     committed = _committed_batches(spark, index_path)
-    id_type = meta.id_type
+    id_type = _store_id_type(spark, index_path, meta)
     want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
     tomb = _tombstoned_ids(
         spark, index_path, id_type, committed, exclude_batch=batch_id
     )
     if tomb is not None:
         want = want.join(tomb, "doc", "left_anti")
-    # eager: `want` feeds three writes below, one of which overwrites the
-    # tombstone root the anti-join above may be reading (replay)
-    want = want.localCheckpoint(eager=True)
-    p_schema = f"doc {id_type}, dl int, term string, tf long"
-    victims = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .join(want, "doc", "left_semi")
-    )
-    neg_df = victims.groupBy("bkt", "term").agg(
-        (-F.count("*")).cast("long").alias("df")
-    )
-    neg_stats = (
-        spark.read.schema(f"doc {id_type}, dl int")
-        .parquet(f"{index_path}/doclens")
-        .filter(F.col("batch").isin(committed))
-        .join(want, "doc", "left_semi")
-        .agg(
-            (-F.count("*")).cast("long").alias("n_docs"),
-            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("sum_dl"),
-        )
-    )
-    cluster_for_partitioned_write(neg_df, ["bkt"], F.col("term")).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(
-        f"{index_path}/dfreq/batch={batch_id}"
-    )
-    neg_stats.write.mode("overwrite").parquet(f"{index_path}/stats/batch={batch_id}")
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    # commit marker LAST: a crash anywhere above leaves the delete invisible
+    if tomb is not None or negatives is not None:
+        # eager: the tombstone write below overwrites a partition of the
+        # root the anti-join reads (replay), and negatives feed further
+        # writes from the same victim set
+        want = want.localCheckpoint(eager=True)
+    if negatives is not None:
+        negatives(want, committed, id_type, batch_id)
+    _write_artifact(want, index_path, "tombstones", batch_id)
     ledger_commit(spark, index_path, batch_id)
 
 
@@ -1422,57 +1487,51 @@ def text_index_health(spark, index_path: str) -> DataFrame:
     (map-side-combined, no row leaves the executors); dfreq/stats/
     tombstones are term-/batch-/id-sized.  O(batches) output rows."""
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    return _batch_health(spark, index_path, meta, [
+        ("stats", "n_docs long, sum_dl long",
+         [F.sum("n_docs"), F.sum("sum_dl")], ["n_docs", "sum_dl"]),
+        ("dfreq", "term string, df long",
+         [F.count("*"), F.sum("df")], ["n_terms", "sum_df"]),
+        ("postings", f"doc {meta.id_type}, dl int, term string, tf long",
+         [F.count("*")], ["n_postings"]),
+    ])
 
-    def _per_batch(sub: str, schema: str, aggs: list, names: list[str]) -> DataFrame:
+
+def _batch_health(spark, index_path: str, meta, parts: list) -> DataFrame:
+    """The per-delivery health report every store kind shares: one row per
+    ledger-committed batch, read from the store's OWN artifacts.  Each
+    ``(sub, schema, aggs, names)`` part aggregates one artifact per batch
+    (map-side-combined, a missing artifact reads as no rows), then
+    ``n_tombstones`` is appended, the parts are full-outer joined on
+    ``batch`` and a batch absent from a part reads 0 there.
+
+    Join assembly, not a zero-padded union (r18): the r17 union form was
+    kept on an at-scale shape argument with no measurement; the r18
+    batch-count instrument (16-delivery BM25 store, interleaved best-of-4)
+    measured the union ~20% SLOWER (0.73-0.78 s joins vs 0.91-0.92 s
+    union) — the full-outer joins REUSE the per-artifact aggregates'
+    batch-hash partitioning (guide §2.4 exchange sharing), while the union
+    discards it and pays a fresh exchange + a second aggregation.  Rows
+    are identical either way (each column is owned by exactly one part)."""
+    from chat_data_pipeline_spark.session import values_df
+
+    committed = _committed_batches(spark, index_path)
+    parts = [*parts, ("tombstones", f"doc {meta.id_type}", [F.count("*")], ["n_tombstones"])]
+    out, names_all = None, []
+    for sub, schema, aggs, names in parts:
         fs, path, _jvm = _fs_for(spark, f"{index_path}/{sub}")
         if not fs.exists(path):
-            from chat_data_pipeline_spark.session import values_df
-
-            return values_df(
+            part = values_df(
                 spark, [], "batch string, " + ", ".join(f"{n} long" for n in names)
             )
-        return (
-            spark.read.schema(schema)
-            .parquet(f"{index_path}/{sub}")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(*[a.cast("long").alias(n) for a, n in zip(aggs, names)])
-        )
-
-    stats = _per_batch(
-        "stats",
-        "n_docs long, sum_dl long",
-        [F.sum("n_docs"), F.sum("sum_dl")],
-        ["n_docs", "sum_dl"],
-    )
-    dfreq = _per_batch(
-        "dfreq",
-        "term string, df long",
-        [F.count("*"), F.sum("df")],
-        ["n_terms", "sum_df"],
-    )
-    postings = _per_batch(
-        "postings",
-        f"doc {meta.id_type}, dl int, term string, tf long",
-        [F.count("*")],
-        ["n_postings"],
-    )
-    tombs = _per_batch(
-        "tombstones", f"doc {meta.id_type}", [F.count("*")], ["n_tombstones"]
-    )
-    # REVERTED to the join assembly (r18): the r17 zero-padded-union form
-    # ("one exchange") was kept on an at-scale shape argument with no
-    # measurement; the r18 batch-count instrument (16-delivery store,
-    # interleaved best-of-4) measured the union ~20% SLOWER (0.73-0.78 s
-    # joins vs 0.91-0.92 s union) — the full-outer joins REUSE the
-    # per-artifact aggregates' batch-hash partitioning (guide §2.4
-    # exchange sharing), while the union discards it and pays a fresh
-    # exchange + a second aggregation over 4×batches rows.  Rows
-    # identical either way (each column is owned by exactly one source).
-    out = stats
-    for other in (dfreq, postings, tombs):
-        out = out.join(other, "batch", "full_outer")
-    fill = {c: 0 for c in ("n_docs", "sum_dl", "n_terms", "sum_df",
-                           "n_postings", "n_tombstones")}
-    return out.fillna(fill).orderBy("batch")
+        else:
+            part = (
+                spark.read.schema(schema)
+                .parquet(f"{index_path}/{sub}")
+                .filter(F.col("batch").isin(committed))
+                .groupBy(F.col("batch").cast("string").alias("batch"))
+                .agg(*[a.cast("long").alias(n) for a, n in zip(aggs, names)])
+            )
+        out = part if out is None else out.join(part, "batch", "full_outer")
+        names_all += names
+    return out.fillna({n: 0 for n in names_all}).orderBy("batch")

@@ -18,7 +18,24 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators.dedup import connected_components_min_label
-from chat_data_pipeline_spark.operators.retrieval import read_meta_row
+from chat_data_pipeline_spark.operators.retrieval import (
+    _committed_batches,
+    _deliver_tombstones,
+    _fold_compact,
+    _fold_manifest_forward,
+    _guard_batch_id_kind,
+    _guard_delivery_id_type,
+    _guard_spent_batch_id,
+    _guard_tombstoned_delivery,
+    _store_id_type,
+    _tombstoned_ids,
+    _write_artifact,
+    _write_store_base,
+    committed_tree,
+    ledger_commit,
+    read_meta_row,
+    validate_batch_id,
+)
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -1207,15 +1224,6 @@ def pq_md5_sign_codebooks(
     ]
 
 
-def _committed_tree(spark, index_path: str, sub: str):
-    """Schema-pinned tree load (see retrieval.committed_tree): probes and
-    compactors must never schema-infer over a tree that can hold a
-    crashed delivery's partial files."""
-    from chat_data_pipeline_spark.operators.retrieval import committed_tree
-
-    return committed_tree(spark, index_path, sub)
-
-
 def _fold_norm_rows(mat: np.ndarray) -> np.ndarray:
     """Row norms as columnwise fold accumulation (per-row ordered IEEE sums,
     the srp_md5 discipline) with the module's 1e-12 zero-vector floor."""
@@ -1464,134 +1472,98 @@ def build_ivf_index(
     so a load-and-probe replays that oracle bit-for-bit.  ``coarse='kmeans'``
     trains the seeded Lloyd centroids of :func:`ivf_topk` and persists them
     under ``centroids/``."""
-    import pandas as pd
-
-    from chat_data_pipeline_spark.operators.retrieval import invalidate_index_meta
-
     spark = df.sparkSession
     # everything that can FAIL without writing — flavor validation and the
     # kmeans driver-side training — runs BEFORE the live root is touched: a
     # typo'd coarse kind or a failed retrain must leave a previously
     # servable index serving, not meta-less (r14 review)
     if coarse == "kmeans":
-        trained_centroids = _train_centroids(
+        centroids = _train_centroids(
             df, vec_col, n_centroids, seed=seed, id_col=id_col
         )
-    elif coarse != "md5":
-        raise ValueError(f"coarse must be 'md5' or 'kmeans', got {coarse!r}")
-    # meta deleted FIRST / written LAST (r13 ADVICE): the delete must come
-    # BEFORE the kmeans branch's centroids write, not just before the
-    # postings write — otherwise an in-place rebuild crashing right after
-    # centroids/ lands would leave OLD meta + OLD postings + NEW centroids,
-    # and probes would silently score stale assignments against the
-    # retrained quantizer.  From here to the meta write the root is
-    # meta-less and every probe fails loudly.
-    invalidate_index_meta(spark, index_path)
-    # a fresh base starts with no pending deletes; cleared inside the
-    # meta-less window (same posture as the text index's base write)
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
-
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{index_path}/tombstones")
-    _tfs.delete(_tpath, True)
-    if coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-        )
-
-        def assign(batches):
-            for batch in batches:
-                if not len(batch):
-                    continue
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                if mat.shape[1] != dim:
-                    raise ValueError(
-                        f"corpus dim {mat.shape[1]} != configured dim {dim}"
-                    )
-                normed = mat / _fold_norm_rows(mat)[:, None]
-                out = batch.copy()
-                out["list"] = np.argmax(
-                    _fold_subspace_dots(normed, coarse_mat, 0), axis=1
-                ).astype("int32")
-                yield out
-
-        vec_type = dict(df.dtypes)[vec_col]
-        id_type = dict(df.dtypes)[id_col]
-        postings = df.select(id_col, vec_col).mapInPandas(
-            assign, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, list int"
-        )
-    elif coarse == "kmeans":
-        centroids = trained_centroids  # trained above, pre-invalidation
         dim = int(centroids.shape[1])
-        cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        # coalesce(1), not repartition(1) (r18): the r15 warning against
-        # coalesce guarded the PARALLELIZE-backed frame (serial pickled
-        # partitions in one task); a values_df LocalRelation is a single
-        # JVM partition, so coalesce is a no-op wrapper while
-        # repartition(1) inserted a round-robin exchange — one extra
-        # driver-paced job per artifact write (measured 2 jobs -> 1)
-        from chat_data_pipeline_spark.session import values_df
+    elif coarse == "md5":
+        centroids = None
+    else:
+        raise ValueError(f"coarse must be 'md5' or 'kmeans', got {coarse!r}")
+    postings = _ivf_postings(df, id_col, vec_col, n_centroids, dim, centroids)
 
-        values_df(
-            spark, cent_rows, "list int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-        postings = _ivf_assign_expr(
+    def write(root: str) -> None:
+        # the centroids land INSIDE the meta-less window (r13 ADVICE): an
+        # in-place rebuild crashing right after them must not leave OLD
+        # meta + OLD postings + NEW centroids for probes to score against
+        if centroids is not None:
+            from chat_data_pipeline_spark.session import values_df
+
+            values_df(
+                spark,
+                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+                "list int, centroid array<double>",
+            ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
+        # the base lands under batch=base so the tree is uniformly two-level
+        # (batch=*/list=*) and later extend_ivf_index deliveries interleave
+        # without producing the mixed root layout partition discovery
+        # rejects; list-clustered + id-salted (unclustered, every task
+        # writes a file into every list dir — tasks × n_centroids files)
+        _write_artifact(postings, root, "postings", "base", "list", id_col)
+
+    _write_store_base(
+        spark, index_path, _IVF_SUBTREES, write,
+        (coarse, int(n_centroids), int(dim), id_col, vec_col,
+         dict(df.dtypes)[id_col]),
+        _IVF_META, clear_folded=_clear_folded,
+    )
+
+
+_IVF_SUBTREES = ("postings", "centroids")
+_IVF_META = (
+    "coarse string, n_centroids int, dim int, id_col string, "
+    "vec_col string, id_type string"
+)
+_IVFPQ_META = (
+    "coarse string, n_centroids int, m int, n_codewords int, dim int, "
+    "id_col string, vec_col string, id_type string"
+)
+
+
+def _ivf_postings(
+    df: DataFrame, id_col: str, vec_col: str, n_centroids: int, dim: int,
+    centroids: np.ndarray | None = None,
+) -> DataFrame:
+    """(id, vec, list) posting rows under an IVF index's coarse arithmetic,
+    shared by build and extend so the two can never diverge: the md5
+    literal ±1 codebook's ordered fold-dot argmax (the exact
+    :func:`ivf_topk_md5` assignment), or — given ``centroids`` — the
+    nearest kmeans centroid."""
+    if centroids is not None:
+        return _ivf_assign_expr(
             df.select(id_col, vec_col), vec_col, centroids, "__lists__", 1
-        ).select(
-            id_col, vec_col, F.element_at("__lists__", 1).alias("list")
-        )
-    # the base lands under batch=base so the tree is uniformly two-level
-    # (batch=*/list=*) and later extend_ivf_index deliveries interleave
-    # without producing the mixed root layout partition discovery rejects;
-    # writing THROUGH the root in overwrite mode also clears any stale
-    # extension batches from a previous build of the same path —
-    # partitionOverwriteMode is pinned STATIC per-write so a session
-    # configured dynamic can't turn that clearing into a batch=base-only
-    # replace that leaves probes silently serving stale extensions.
-    # Cluster on (list, salt) BEFORE the partitioned write: unclustered,
-    # every task writes a file into every list dir (tasks × n_centroids
-    # files — tens of millions at 100 TB, the sink-sizing metadata bomb);
-    # clustered on list ALONE, the corpus-sized write funnels through
-    # ≤ n_centroids tasks (the scale-killer in the other direction).  The
-    # id-hashed salt keeps files at O(n_centroids × WRITE_SALT) while the
-    # write stage scales with the salt.
-    from chat_data_pipeline_spark.operators.retrieval import (
-        cluster_for_partitioned_write,
+        ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
+    coarse_mat = np.asarray(
+        pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
     )
 
-    cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{index_path}/postings")
-    # commit ledger (same posture as the text index): reset with the base
-    # (driver-side FS op), one touch marker per committed delivery — probes
-    # read only marked batches, so a crashed extension's partial part-files
-    # are invisible; the base's own commit marker is the meta write below
-    from chat_data_pipeline_spark.operators.retrieval import (
-        folded_clear,
-        ledger_reset,
+    def assign(batches):
+        for batch in batches:
+            if not len(batch):
+                continue
+            mat = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
+            )
+            if mat.shape[1] != dim:
+                raise ValueError(f"corpus dim {mat.shape[1]} != index dim {dim}")
+            normed = mat / _fold_norm_rows(mat)[:, None]
+            out = batch.copy()
+            out["list"] = np.argmax(
+                _fold_subspace_dots(normed, coarse_mat, 0), axis=1
+            ).astype("int32")
+            yield out
+
+    types = dict(df.dtypes)
+    return df.select(id_col, vec_col).mapInPandas(
+        assign,
+        schema=f"{id_col} {types[id_col]}, {vec_col} {types[vec_col]}, list int",
     )
-
-    ledger_reset(spark, index_path)
-    if _clear_folded:
-        # fresh-from-source world: old delivery ids are reusable.  A
-        # REBUILD passes False — it wrote the carried-forward spent-id
-        # manifest BEFORE this base landed, and that manifest must
-        # survive (r15 review: recording it after meta would leave a
-        # crash window with a servable root and no manifest, reopening
-        # the replay double-count this machinery closes)
-        folded_clear(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [(coarse, int(n_centroids), int(dim), id_col, vec_col,
-          dict(df.dtypes)[id_col])],
-        "coarse string, n_centroids int, dim int, id_col string, "
-        "vec_col string, id_type string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
 
 
 def extend_ivf_index(
@@ -1614,20 +1586,8 @@ def extend_ivf_index(
     extensions as one table (``build_ivf_index`` writes its base under
     ``batch=base`` through the root, which also clears stale extensions on
     a rebuild)."""
-    import pandas as pd
-
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_batch_id_kind,
-        _guard_tombstoned_delivery,
-        validate_batch_id,
-    )
-
     batch_id = validate_batch_id(batch_id)
     spark = df.sparkSession
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_spent_batch_id,
-    )
-
     if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
         return  # folded replay: the base already holds this delivery
     # cross-kind batch-id reuse is refused (same contract as the text
@@ -1644,25 +1604,9 @@ def extend_ivf_index(
             F.col(vec_col or meta.vec_col).alias(meta.vec_col),
         )
     id_col, vec_col = meta.id_col, meta.vec_col
-    # refuse a wrong-typed delivery up front, not at probe; meta pins
-    # id_type since r15 (one tiny file already read above) — only a
-    # pre-r15 root falls back to inferring it, and then from the BASE
-    # partition only: inferring over the whole postings tree would touch
-    # the footers of a crashed uncommitted delivery's partial files (the
-    # base is complete by construction, its commit marker being the meta
-    # write — same pin as maintenance.py's store_kind_and_meta path)
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_delivery_id_type,
-    )
-
+    # refuse a wrong-typed delivery up front, not at probe
     _guard_delivery_id_type(
-        df,
-        id_col,
-        meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[id_col],
-        index_path,
+        df, id_col, _store_id_type(spark, index_path, meta), index_path
     )
     # a delivery containing a tombstoned id is refused (same contract as
     # extend_text_index): the tombstone would hide the new rows from
@@ -1678,63 +1622,23 @@ def extend_ivf_index(
     ).get(vec_col)
     if base_vec_type is not None and dict(df.dtypes)[vec_col] != base_vec_type:
         df = df.withColumn(vec_col, F.col(vec_col).cast(base_vec_type))
-    n_centroids, dim = int(meta.n_centroids), int(meta.dim)
-    if meta.coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-        )
-
-        def assign(batches):
-            for batch in batches:
-                if not len(batch):
-                    continue
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                if mat.shape[1] != dim:
-                    raise ValueError(
-                        f"corpus dim {mat.shape[1]} != index dim {dim}"
-                    )
-                normed = mat / _fold_norm_rows(mat)[:, None]
-                out = batch.copy()
-                out["list"] = np.argmax(
-                    _fold_subspace_dots(normed, coarse_mat, 0), axis=1
-                ).astype("int32")
-                yield out
-
-        vec_type = dict(df.dtypes)[vec_col]
-        id_type = dict(df.dtypes)[id_col]
-        postings = df.select(id_col, vec_col).mapInPandas(
-            assign, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, list int"
-        )
-    elif meta.coarse == "kmeans":
+    if meta.coarse == "kmeans":
         cent = (
             spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
         )
         centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
-        postings = _ivf_assign_expr(
-            df.select(id_col, vec_col), vec_col, centroids, "__lists__", 1
-        ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
+    elif meta.coarse == "md5":
+        centroids = None
     else:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    # same salted list-clustering as the base build: O(n_centroids × salt)
-    # files per delivery with the write stage decoupled from the centroid
-    # count; static overwrite pinned so a replayed delivery fully replaces
-    # its batch dir (dynamic mode would keep stale list dirs the replay's
-    # new content no longer produces)
-    from chat_data_pipeline_spark.operators.retrieval import (
-        cluster_for_partitioned_write,
+    postings = _ivf_postings(
+        df, id_col, vec_col, int(meta.n_centroids), int(meta.dim), centroids
     )
-
-    cluster_for_partitioned_write(postings, ["list"], F.col(id_col)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
-        f"{index_path}/postings/batch={batch_id}"
-    )
+    # same salted list-clustering as the base build; static overwrite
+    # pinned so a replayed delivery fully replaces its batch dir
+    _write_artifact(postings, index_path, "postings", batch_id, "list", id_col)
     # commit marker LAST: a crashed delivery's partial part-files stay
     # invisible to probes until a replay completes and re-commits
-    from chat_data_pipeline_spark.operators.retrieval import ledger_commit
-
     ledger_commit(spark, index_path, batch_id)
 
 
@@ -1757,16 +1661,11 @@ def ivf_topk_persisted(
     build-and-probe path (``ivf_topk_md5`` / ``ivf_topk``)."""
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _tombstoned_ids,
-    )
-
     meta = read_meta_row(spark, index_path)
     committed = _committed_batches(spark, index_path)
     # ledger-committed batches only: a crashed delivery's partial
     # part-files are invisible until its replay re-commits
-    postings = _committed_tree(spark, index_path, "postings").filter(
+    postings = committed_tree(spark, index_path, "postings").filter(
         F.col("batch").isin(committed)
     )
     id_col, vec_col = meta.id_col, meta.vec_col
@@ -2306,12 +2205,10 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
     """
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import _committed_batches
-
     meta = read_meta_row(spark, index_path)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
     vec_col = meta.vec_col
-    postings = _committed_tree(spark, index_path, "postings").filter(
+    postings = committed_tree(spark, index_path, "postings").filter(
         F.col("batch").isin(_committed_batches(spark, index_path))
     )
 
@@ -2391,93 +2288,34 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
     postings before the overwrite — fine at single-node scale); a 100 TB
     deployment passes ``dst_index`` to stream into a fresh root with no
     checkpoint and swaps probes over (write-then-swap)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-        _tombstoned_ids,
-        cluster_for_partitioned_write,
-        invalidate_index_meta,
-        ledger_reset,
-    )
-
     meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
     # payload column by flavor: the compressed md5pq store folds its codes,
     # the full-precision flavors their vectors — assignments never move
     # lists either way, so compaction is layout-only for all of them
     payload = "pq_code" if meta.coarse == "md5pq" else meta.vec_col
-    postings = (
-        _committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(meta.id_col, payload, "list")
-    )
-    tomb = _tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[meta.id_col], committed
-    )
-    if tomb is not None:
-        # compaction makes deletes physical and clears the tombstone set
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
+
+    def load(committed: list[str]) -> dict:
+        postings = (
+            committed_tree(spark, index_path, "postings")
+            .filter(F.col("batch").isin(committed))
+            .select(meta.id_col, payload, "list")
         )
-    cent = None
-    if meta.coarse == "kmeans":
-        cent = spark.read.parquet(f"{index_path}/centroids")
-    if dst_index is None:
-        postings = postings.localCheckpoint(eager=True)
-        if cent is not None:
-            cent = cent.localCheckpoint(eager=True)
-        dst_index = index_path
-    # folded manifest BEFORE the rewrite (see retrieval.folded_record):
-    # deliveries this compaction folds must read as spent once the
-    # compacted base serves; marking early is safe — they stay
-    # ledger-committed in the old root until the rewrite lands
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _fold_manifest_forward,
+        frames = {"postings": (postings, meta.id_col)}
+        if meta.coarse == "kmeans":
+            frames["centroids"] = (spark.read.parquet(f"{index_path}/centroids"), None)
+        return frames
+
+    def write(root: str, f: dict) -> None:
+        if "centroids" in f:
+            f["centroids"].coalesce(1).write.mode("overwrite").parquet(
+                f"{root}/centroids"
+            )
+        _write_artifact(f["postings"], root, "postings", "base", "list", meta.id_col)
+
+    _fold_compact(
+        spark, index_path, dst_index, meta, _IVF_SUBTREES,
+        _IVFPQ_META if meta.coarse == "md5pq" else _IVF_META, load, write,
     )
-
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    # meta-less rebuild window (r13 ADVICE): a compaction crash after the
-    # postings overwrite must not leave probes merging the partial new
-    # base with the old ledger's extension state
-    invalidate_index_meta(spark, dst_index)
-    # the compacted root starts with no pending deletes (they just became
-    # physical); cleared inside the meta-less window
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{dst_index}/tombstones")
-    _tfs.delete(_tpath, True)
-    if cent is not None:
-        cent.coalesce(1).write.mode("overwrite").parquet(
-            f"{dst_index}/centroids"
-        )
-    cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(meta.id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{dst_index}/postings")
-    ledger_reset(spark, dst_index)
-    # carry id_type forward (r15: the extend guards read it from meta; a
-    # pre-r15 root lacks the field, so recover it from the postings once)
-    id_type = meta.asDict().get("id_type") or dict(postings.dtypes)[meta.id_col]
-    if meta.coarse == "md5pq":
-        from chat_data_pipeline_spark.session import values_df
-
-        values_df(
-            spark,
-            [(meta.coarse, int(meta.n_centroids), int(meta.m),
-              int(meta.n_codewords), int(meta.dim), meta.id_col, meta.vec_col,
-              id_type)],
-            "coarse string, n_centroids int, m int, n_codewords int, dim int, "
-            "id_col string, vec_col string, id_type string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
-    else:
-        from chat_data_pipeline_spark.session import values_df
-
-        values_df(
-            spark,
-            [(meta.coarse, int(meta.n_centroids), int(meta.dim), meta.id_col,
-              meta.vec_col, id_type)],
-            "coarse string, n_centroids int, dim int, id_col string, "
-            "vec_col string, id_type string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
 
 
 def rebuild_ivf_index(
@@ -2520,12 +2358,6 @@ def rebuild_ivf_index(
     ``resolve_index_alias`` provide that pointer as an operator (atomic
     versioned rename, refuses meta-less targets).
     """
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fold_manifest_forward,
-        _tombstoned_ids,
-    )
-
     meta = read_meta_row(spark, index_path)
     if meta.coarse == "md5pq":
         raise ValueError(
@@ -2536,7 +2368,7 @@ def rebuild_ivf_index(
         )
     committed = _committed_batches(spark, index_path)
     union = (
-        _committed_tree(spark, index_path, "postings")
+        committed_tree(spark, index_path, "postings")
         .filter(F.col("batch").isin(committed))
         .select(meta.id_col, meta.vec_col)
     )
@@ -2600,41 +2432,7 @@ def delete_from_ivf_index(
     ids are folded in again harmlessly (no additive state to
     double-subtract), but are excluded anyway so the tombstone set stays
     duplicate-free across deliveries."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _guard_batch_id_kind,
-        _guard_spent_batch_id,
-        _tombstoned_ids,
-        ledger_commit,
-        validate_batch_id,
-    )
-
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    # pre-r15 meta-less fallback pinned to the BASE partition (r17): full
-    # postings-tree inference would read the footers of a crashed
-    # uncommitted delivery's partial files; the base is complete by
-    # construction (its commit marker is the meta write)
-    id_type = meta.asDict().get("id_type") or dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    )[meta.id_col]
-    want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        # eager: the write below overwrites a partition of the root the
-        # anti-join reads (delete replay)
-        want = want.localCheckpoint(eager=True)
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
+    _deliver_tombstones(spark, index_path, ids, batch_id, "postings")
 
 
 def _ivfpq_code_postings(
@@ -2723,44 +2521,21 @@ def build_ivfpq_index(
     cleared in the meta-less window.  NOTE: storage is LOSSY — a rebuild
     at different params needs the source corpus, not the index (inherent
     to PQ); compaction and deletes work normally."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _fs_for,
-        cluster_for_partitioned_write,
-        folded_clear,
-        invalidate_index_meta,
-        ledger_reset,
-    )
-
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    spark = df.sparkSession
     postings = _ivfpq_code_postings(
         df, id_col, vec_col, n_centroids, m, n_codewords, dim
     )
-    invalidate_index_meta(spark, index_path)
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{index_path}/tombstones")
-    _tfs.delete(_tpath, True)
-    if _clear_folded:
-        # a FRESH build starts a new world: old ids become reusable.  A
-        # rebuild passes False — it wrote the spent-id manifest BEFORE
-        # calling here and that manifest must survive the base rewrite
-        # (mirrors build_ivf_index's contract with rebuild_ivf_index).
-        folded_clear(spark, index_path)
-    cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{index_path}/postings")
-    ledger_reset(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [("md5pq", int(n_centroids), int(m), int(n_codewords), int(dim),
-          id_col, vec_col, dict(df.dtypes)[id_col])],
-        "coarse string, n_centroids int, m int, n_codewords int, dim int, "
-        "id_col string, vec_col string, id_type string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    # a rebuild passes _clear_folded=False: it wrote the spent-id manifest
+    # BEFORE calling here and that manifest must survive the base rewrite
+    # (mirrors build_ivf_index's contract with rebuild_ivf_index)
+    _write_store_base(
+        df.sparkSession, index_path, _IVF_SUBTREES,
+        lambda root: _write_artifact(postings, root, "postings", "base", "list", id_col),
+        ("md5pq", int(n_centroids), int(m), int(n_codewords), int(dim),
+         id_col, vec_col, dict(df.dtypes)[id_col]),
+        _IVFPQ_META, clear_folded=_clear_folded,
+    )
 
 
 def extend_ivfpq_index(
@@ -2776,21 +2551,8 @@ def extend_ivfpq_index(
     ``id_col``/``vec_col`` override the meta COLUMN NAMES when the
     delivered frame uses its own (config-driven callers pass theirs
     instead of pre-reading meta — one meta read per delivery)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_batch_id_kind,
-        _guard_delivery_id_type,
-        _guard_tombstoned_delivery,
-        cluster_for_partitioned_write,
-        ledger_commit,
-        validate_batch_id,
-    )
-
     batch_id = validate_batch_id(batch_id)
     spark = df.sparkSession
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_spent_batch_id,
-    )
-
     if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
         return  # folded replay: the base already holds this delivery
     _guard_batch_id_kind(
@@ -2804,26 +2566,16 @@ def extend_ivfpq_index(
             F.col(id_col or meta.id_col).alias(meta.id_col),
             F.col(vec_col or meta.vec_col).alias(meta.vec_col),
         )
-    # pre-r15 fallback pinned to batch=base (r17) — see extend_ivf_index:
-    # whole-tree inference touches crashed partial-delivery footers
     _guard_delivery_id_type(
-        df,
-        meta.id_col,
-        meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col],
-        index_path,
+        df, meta.id_col, _store_id_type(spark, index_path, meta), index_path
     )
     _guard_tombstoned_delivery(df.select(meta.id_col), index_path, meta.id_col)
     postings = _ivfpq_code_postings(
         df, meta.id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
         int(meta.n_codewords), int(meta.dim),
     )
-    cluster_for_partitioned_write(postings, ["list"], F.col(meta.id_col)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
-        f"{index_path}/postings/batch={batch_id}"
+    _write_artifact(
+        postings, index_path, "postings", batch_id, "list", meta.id_col
     )
     ledger_commit(spark, index_path, batch_id)
 
@@ -2871,13 +2623,6 @@ def rebuild_ivfpq_index(
     arithmetic — probes of the rebuilt root are BIT-IDENTICAL to a fresh
     ``build_ivfpq_index`` over the retained vectors at the same params
     (tested, and driver-hashed via ``ann_ivfpq_rebuild_report``)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fold_manifest_forward,
-        _guard_delivery_id_type,
-        _tombstoned_ids,
-    )
-
     meta = read_meta_row(spark, index_path)
     if meta.coarse != "md5pq":
         raise ValueError(
@@ -2894,11 +2639,7 @@ def rebuild_ivfpq_index(
         F.col(vec_col or meta.vec_col).alias(meta.vec_col),
     )
     _guard_delivery_id_type(
-        union, meta.id_col, meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col],
-        index_path,
+        union, meta.id_col, _store_id_type(spark, index_path, meta), index_path
     )
     committed = _committed_batches(spark, index_path)
     tomb = _tombstoned_ids(
@@ -2948,11 +2689,6 @@ def ivfpq_topk_persisted(
     the storage and scan bytes of the full-precision probe."""
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _tombstoned_ids,
-    )
-
     meta = read_meta_row(spark, index_path)
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
@@ -2960,7 +2696,7 @@ def ivfpq_topk_persisted(
     n_codewords, dim = int(meta.n_codewords), int(meta.dim)
     dsub = dim // m_sub
     committed = _committed_batches(spark, index_path)
-    postings = _committed_tree(spark, index_path, "postings").filter(
+    postings = committed_tree(spark, index_path, "postings").filter(
         F.col("batch").isin(committed)
     )
     id_col = meta.id_col

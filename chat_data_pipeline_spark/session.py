@@ -253,10 +253,15 @@ def local_parquet_schema(spark, path: str):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        local = part.toUri().getPath()
-        aschema = pq.read_schema(local)
+        # one footer parse per file: the arrow schema and the INT96 scan
+        # below both read the same ParquetFile
+        pf = pq.ParquetFile(part.toUri().getPath())
+        has_int96 = any(
+            pf.schema.column(i).physical_type == "INT96"
+            for i in range(len(pf.schema))
+        )
         fields = []
-        for f in aschema:
+        for f in pf.schema_arrow:
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
                 # nanosAsLong only applies to INT64 TIMESTAMP(NANOS), but
                 # pyarrow reports legacy INT96 timestamps as timestamp[ns]
@@ -264,11 +269,7 @@ def local_parquet_schema(spark, path: str):
                 # exists in the footer — otherwise fall back to Spark
                 # inference (a wrong-but-non-throwing mapping would never
                 # trigger the fallback and misread at scan time)
-                pf = pq.ParquetFile(local)
-                if any(
-                    pf.schema.column(i).physical_type == "INT96"
-                    for i in range(len(pf.schema))
-                ):
+                if has_int96:
                     return None
                 fields.append(pa.field(f.name, pa.int64()))
             else:

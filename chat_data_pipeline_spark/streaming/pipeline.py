@@ -758,6 +758,45 @@ def _step_lease(spark, store_path: str, kind: str, checkpoint_path: str,
     )
 
 
+def _store_stream(
+    stream: DataFrame, root: str, checkpoint_path: str, kind: str, verb: str,
+    batch_id_prefix: str, lease_ttl_seconds: int, lease_wait_seconds: float,
+    compact: tuple = (None, None, None), cols: tuple = (), **extend_kwargs,
+):
+    """The one micro-batch step behind every delivery (``verb='extend'``)
+    and takedown (``verb='delete'``) stream, for every store kind of
+    ``maintenance.STORE_KINDS``: an idle trigger writes nothing (no empty
+    ledger entries); otherwise, under the root's writer lease, the batch
+    (projected to ``cols`` when given) lands as ONE ledger-committed
+    delivery with id ``{batch_id_prefix}{epoch}`` and — deliveries only —
+    ``compact`` = ``(every, max_batches, max_tombstone_nanos)`` may
+    auto-compact (:func:`_maybe_auto_compact`) inside the same lease."""
+    from chat_data_pipeline_spark.operators.maintenance import store_verb
+
+    mutate = store_verb(kind, verb)
+    label = f"{kind}-{'takedown' if verb == 'delete' else 'delivery'}"
+
+    def step(batch_df: DataFrame, epoch: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        rows = batch_df.select(*cols) if cols else batch_df
+        bid = f"{batch_id_prefix}{epoch}"
+        with _step_lease(spark, root, label, checkpoint_path,
+                         lease_ttl_seconds, lease_wait_seconds):
+            if verb == "delete":
+                mutate(spark, root, rows, batch_id=bid)
+            else:
+                mutate(rows, root, batch_id=bid, **extend_kwargs)
+                _maybe_auto_compact(spark, root, epoch, *compact)
+
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .start()
+    )
+
+
 def streaming_index_delivery(
     stream: DataFrame,
     index_path: str,
@@ -800,29 +839,11 @@ def streaming_index_delivery(
     checkpoint generation its own prefix (``s2``, ``ingest-b``, ...) and
     the collision cannot happen; keep it disjoint from the takedown
     stream's prefix."""
-    from chat_data_pipeline_spark.operators.retrieval import extend_text_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # no empty ledger entries for idle triggers
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "bm25-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_text_index(
-                batch_df.select(id_col, text_col),
-                index_path,
-                batch_id=f"{batch_id_prefix}{batch_id}",
-                text_col=text_col,
-                id_col=id_col,
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "bm25", "extend", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        compact=(auto_compact_every, max_batches, max_tombstone_nanos),
+        cols=(id_col, text_col), text_col=text_col, id_col=id_col,
     )
 
 
@@ -849,25 +870,10 @@ def streaming_ivf_delivery(
     prefix per checkpoint generation so recycled epoch counters can never
     collide with ids a compaction already spent (see
     :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.similarity import extend_ivf_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivf-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_ivf_index(
-                batch_df, index_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "ivf", "extend", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        compact=(auto_compact_every, max_batches, max_tombstone_nanos),
     )
 
 
@@ -895,25 +901,10 @@ def streaming_ivfpq_delivery(
     meta; the base must exist (``build_ivfpq_index`` first).
     ``batch_id_prefix``: fresh per checkpoint generation (see
     :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.similarity import extend_ivfpq_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivfpq-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_ivfpq_index(
-                batch_df, index_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "ivfpq", "extend", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        compact=(auto_compact_every, max_batches, max_tombstone_nanos),
     )
 
 
@@ -935,24 +926,10 @@ def streaming_ivfpq_takedown(
     prefix per checkpoint generation (see
     :func:`streaming_index_delivery`).  Compact to make the removals
     physical."""
-    from chat_data_pipeline_spark.operators.similarity import delete_from_ivf_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivfpq-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_ivf_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "ivfpq", "delete", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        cols=(id_col,),
     )
 
 
@@ -989,24 +966,10 @@ def streaming_index_takedown(
     loudly instead of racing a compaction.  A delivery containing a
     currently-tombstoned id still fails loudly by design (compact first,
     then re-deliver)."""
-    from chat_data_pipeline_spark.operators.retrieval import delete_from_text_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "bm25-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_text_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "bm25", "delete", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        cols=(id_col,),
     )
 
 
@@ -1026,24 +989,10 @@ def streaming_ivf_takedown(
     adjust.  ``batch_id_prefix``: fresh per checkpoint generation (see
     :func:`streaming_index_delivery`).  Compact or rebuild to make the
     removals physical."""
-    from chat_data_pipeline_spark.operators.similarity import delete_from_ivf_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivf-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_ivf_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, index_path, checkpoint_path, "ivf", "delete", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        cols=(id_col,),
     )
 
 
@@ -1068,27 +1017,10 @@ def streaming_neardup_store_delivery(
     :func:`streaming_neardup_store_takedown` (keep its prefix disjoint
     from this stream's ``batch_id_prefix``, itself fresh per checkpoint
     generation — see :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.neardup_store import (
-        extend_neardup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "neardup-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_neardup_index(
-                batch_df, store_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, store_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, store_path, checkpoint_path, "neardup", "extend", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        compact=(auto_compact_every, max_batches, max_tombstone_nanos),
     )
 
 
@@ -1110,26 +1042,10 @@ def streaming_neardup_store_takedown(
     invisible-until-committed crash posture, per-trigger writer lease
     and ``batch_id_prefix`` discipline as the other takedown streams;
     compact to make the removals physical."""
-    from chat_data_pipeline_spark.operators.neardup_store import (
-        delete_from_neardup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "neardup-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_neardup_index(
-                batch_df.sparkSession,
-                store_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, store_path, checkpoint_path, "neardup", "delete", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        cols=(id_col,),
     )
 
 
@@ -1150,26 +1066,10 @@ def streaming_dedup_store_takedown(
     replay semantics, invisible-until-committed crash posture,
     per-trigger writer lease and ``batch_id_prefix`` discipline as the
     other takedown streams; compact to make the removals physical."""
-    from chat_data_pipeline_spark.operators.dedup_store import (
-        delete_from_dedup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "dedup-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_dedup_index(
-                batch_df.sparkSession,
-                store_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, store_path, checkpoint_path, "dedup", "delete", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        cols=(id_col,),
     )
 
 
@@ -1235,23 +1135,8 @@ def streaming_dedup_store_delivery(
     :func:`streaming_dedup_store_takedown` (keep its prefix disjoint
     from this stream's ``batch_id_prefix``, itself fresh per checkpoint
     generation — see :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.dedup_store import extend_dedup_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "dedup-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_dedup_index(
-                batch_df, store_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, store_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _store_stream(
+        stream, store_path, checkpoint_path, "dedup", "extend", batch_id_prefix,
+        lease_ttl_seconds, lease_wait_seconds,
+        compact=(auto_compact_every, max_batches, max_tombstone_nanos),
     )

@@ -297,17 +297,6 @@ def test_combine_sources_orc_and_text(spark, tmp_path):
     assert "line one doc" in whole.collect()[0].text
 
 
-def test_mini_yaml_parser():
-    from chat_data_pipeline_spark.cli import _mini_yaml
-
-    cfg = _mini_yaml(CONFIG.format(conv_path="/a/b.parquet", out_path="/c"))
-    assert cfg["datasets"] == [{"path": "/a/b.parquet"}]
-    assert cfg["seed"] == 42
-    assert cfg["response"]["cleaners"] == ["normalize_whitespace", "normalize_punctuation"]
-    assert cfg["response"]["filters"][0]["args"]["max_word_threshold"] == 100
-    assert cfg["instruction"]["deduplication"]["do_deduplication"] is False
-
-
 def test_streaming_decontaminate_matches_batch(spark, tmp_path):
     """Stream-side decontamination drops exactly the docs the batch operator
     drops (stateless predicate ≡ explode/semi/anti shape)."""
@@ -1351,6 +1340,39 @@ def test_cli_index_block_builds_and_extends(spark, tmp_path):
         _run_indexing(spark, df, {"bm25": {}})
     with _pytest.raises(ValueError, match="batch_id"):
         _run_indexing(spark, df, {"bm25": {"path": str(idx), "action": "extend"}})
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "ivfpq", "dedup", "neardup"])
+def test_cli_index_block_validation_every_kind(spark, tmp_path, kind):
+    """Every `index.<kind>` block refuses a malformed config before it
+    reads anything: no `path`, extend/delete without `batch_id`, an
+    unknown action, and a delete carrying a stale `dataset:` key (a reused
+    extend config would otherwise tombstone the whole source table).  No
+    Spark job may run on the way to any of these errors."""
+    from chat_data_pipeline_spark.cli import _run_indexing
+
+    path = str(tmp_path / kind)
+    bad = [
+        ({}, "needs `path`"),
+        ({"path": path, "action": "extend"}, "needs `batch_id`"),
+        ({"path": path, "action": "delete"}, "needs `batch_id`"),
+        ({"path": path, "action": "faiss"}, "action must be"),
+        (
+            {"path": path, "action": "delete", "batch_id": "t1",
+             "dataset": str(tmp_path / "vectors.parquet")},
+            "not `dataset`",
+        ),
+    ]
+    sc = spark.sparkContext
+    group = f"cli-validation-{kind}"
+    sc.setJobGroup(group, "index block validation")
+    try:
+        for spec, fragment in bad:
+            with pytest.raises(ValueError, match=fragment):
+                _run_indexing(spark, None, {kind: spec})
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_cli_index_compact_action(spark, tmp_path):

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for named registry queries into
-plans/r17/<name>_<tag>.txt (tag = before/after).  Builds run as needed
+<out_dir>/<name>_<tag>.txt (tag = before/after).  Builds run as needed
 (memoized per process), so the captured plan is the steady-state plan the
-bench times.  Usage: python tools_r17_explain.py <tag> name1,name2,..."""
+bench times.  Usage: python tools_explain.py <out_dir> <tag> name1,name2,...
+(e.g. ``python tools_explain.py plans/r18 after embedding_neardup_lsh_md5``)"""
 import io
 import os
 import sys
@@ -15,8 +16,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2].split(",")
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3].split(",")
     from chat_data_pipeline_spark import get_spark
     from chat_data_pipeline_spark.queries import REGISTRY
 
@@ -25,13 +26,13 @@ def main() -> None:
         master=f"local[{CPUS}]",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "64")),
     )
-    os.makedirs("plans/r17", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = REGISTRY[name].fn(spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = f"plans/r17/{name}_{tag}.txt"
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(buf.getvalue())
         print(f"wrote {path} ({len(buf.getvalue())} bytes)")

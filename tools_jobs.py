@@ -3,7 +3,7 @@
 
 Runs each named query twice (run 1 pays builds/memos), counts the job ids
 the second run adds via StatusTracker — counts depend only on code, not on
-machine load.  Usage: python tools_r18_jobs.py name1,name2,...
+machine load.  Usage: python tools_jobs.py name1,name2,...
 Prints one JSON line {name: steady_jobs}.
 """
 import json
