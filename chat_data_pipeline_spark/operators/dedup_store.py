@@ -45,17 +45,13 @@ from chat_data_pipeline_spark.operators.retrieval import (
     _batch_health,
     _committed_batches,
     _deliver_tombstones,
+    _extend_store,
     _fold_compact,
-    _guard_batch_id_kind,
-    _guard_delivery_id_type,
-    _guard_spent_batch_id,
-    _guard_tombstoned_delivery,
-    _tombstoned_ids,
+    _live_rows,
+    _read_committed,
     _write_artifact,
     _write_store_base,
-    ledger_commit,
     read_meta_row,
-    validate_batch_id,
 )
 
 SEED = 42
@@ -186,25 +182,18 @@ def extend_dedup_index(
     meta read per delivery, not two).  Replay overwrites its own
     partition and re-commits; a delivery containing a tombstoned id is
     refused until compaction (same contract as the other indexes)."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
-        return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
+
+    def write(df: DataFrame, meta, bid: str) -> None:
+        bands = _bands_for(
+            df.select(meta.id_col, meta.text_col), meta.text_col, meta.id_col,
+            _params_from_meta(meta),
+        )
+        _write_artifact(bands, index_path, "bands", bid, "band", "sig")
+
+    _extend_store(
+        df, index_path, batch_id, write,
+        names={"id_col": id_col, "text_col": column},
     )
-    meta = read_meta_row(spark, index_path)
-    column = column or meta.text_col
-    id_col = id_col or meta.id_col
-    _guard_delivery_id_type(df, id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(df.select(id_col), index_path, id_col)
-    bands = _bands_for(
-        df.select(id_col, column), column, id_col,
-        _params_from_meta(meta),
-    )
-    _write_artifact(bands, index_path, "bands", batch_id, "band", "sig")
-    # commit marker LAST: a crashed delivery stays invisible to probes
-    ledger_commit(spark, index_path, batch_id)
 
 
 def delete_from_dedup_index(
@@ -241,14 +230,14 @@ def filter_against_dedup_index(
     column = column or meta.text_col
     id_col = id_col or meta.id_col
     committed = _committed_batches(spark, index_path)
-    ref = (
-        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-        .parquet(f"{index_path}/bands")
-        .filter(F.col("batch").isin(committed))
+    ref = _live_rows(
+        spark, index_path,
+        _read_committed(
+            spark, index_path, "bands", committed,
+            f"id {meta.id_type}, sig {meta.sig_type}",
+        ),
+        "id", meta.id_type, committed,
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        ref = ref.join(tomb.withColumnRenamed("doc", "id"), "id", "left_anti")
     ref_keys = ref.select("band", "sig").distinct()
     nb = _bands_for(
         new_df.select(id_col, column), column, id_col, _params_from_meta(meta)
@@ -273,12 +262,10 @@ def compact_dedup_index(spark, index_path: str, dst_index: str | None = None) ->
     meta = read_meta_row(spark, index_path)
 
     def load(committed: list[str]) -> dict:
-        bands = (
-            spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-            .parquet(f"{index_path}/bands")
-            .filter(F.col("batch").isin(committed))
-            .select("id", "sig", "band")
-        )
+        bands = _read_committed(
+            spark, index_path, "bands", committed,
+            f"id {meta.id_type}, sig {meta.sig_type}",
+        ).select("id", "sig", "band")
         return {"bands": (bands, "id")}
 
     def write(root: str, f: dict) -> None:

@@ -209,7 +209,7 @@ def _count_committed(spark, index_path: str, sub: str, committed: list[str]) -> 
     artifact directory does not exist.  Parquet ``count()`` resolves from
     file-footer row counts — a metadata operation, no data scan — so this
     stays cheap on a corpus-sized postings table."""
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
+    from chat_data_pipeline_spark.operators.retrieval import _fs_for, _read_committed
 
     fs, path, _jvm = _fs_for(spark, f"{index_path}/{sub}")
     if not fs.exists(path):
@@ -220,12 +220,7 @@ def _count_committed(spark, index_path: str, sub: str, committed: list[str]) -> 
     # corrupt partial files must not fail the maintenance read that
     # decides the post-crash compaction (same discipline as every other
     # read in this module)
-    return (
-        spark.read.schema("batch string")
-        .parquet(f"{index_path}/{sub}")
-        .filter(F.col("batch").isin(committed))
-        .count()
-    )
+    return _read_committed(spark, index_path, sub, committed, "batch string").count()
 
 
 def maintenance_plan(
@@ -288,6 +283,7 @@ def maintenance_plan_values(
     from chat_data_pipeline_spark.operators.retrieval import (
         _committed_batches,
         _fs_for,
+        _read_committed,
         _store_id_type,
         _tombstoned_ids,
     )
@@ -312,12 +308,9 @@ def maintenance_plan_values(
     # hides their ROWS, but inference reads footers before any filter
     # applies
     def _resident_ids():
-        return (
-            spark.read.schema(f"{res_id} {id_type}")
-            .parquet(f"{index_path}/{res_sub}")
-            .filter(F.col("batch").isin(committed))
-            .select(F.col(res_id).alias("doc"))
-        )
+        return _read_committed(
+            spark, index_path, res_sub, committed, f"{res_id} {id_type}"
+        ).select(F.col(res_id).alias("doc"))
 
     # dead + live in ONE residency scan per root (r17, guide §2.4/§1.2):
     # the former shape paid two driver-paced jobs over the same artifact
@@ -363,9 +356,9 @@ def maintenance_plan_values(
             if not fs.exists(spath):
                 return 0
             return int(
-                spark.read.schema("n_docs long, sum_dl long")
-                .parquet(f"{index_path}/stats")
-                .filter(F.col("batch").isin(committed))
+                _read_committed(
+                    spark, index_path, "stats", committed, "n_docs long, sum_dl long"
+                )
                 .agg(F.coalesce(F.sum("n_docs"), F.lit(0)))
                 .first()[0]
             )

@@ -43,20 +43,16 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators.retrieval import (
     _batch_health,
+    _cast_to_base,
     _committed_batches,
     _deliver_tombstones,
+    _extend_store,
     _fold_compact,
-    _guard_batch_id_kind,
-    _guard_delivery_id_type,
-    _guard_spent_batch_id,
-    _guard_tombstoned_delivery,
-    _tombstoned_ids,
-    _write_artifact,
+    _live_rows,
+    _read_committed,
+    _write_artifacts,
     _write_store_base,
-    committed_tree,
-    ledger_commit,
     read_meta_row,
-    validate_batch_id,
 )
 from chat_data_pipeline_spark.operators.similarity import srp_md5_sign_planes
 
@@ -116,17 +112,10 @@ def _write_batch(
     index_path: str, batch_id: str, posting: DataFrame, vectors: DataFrame
 ) -> None:
     # both frames derive from the eagerly-checkpointed verify-vector base
-    # (_postings_and_vectors), and the two writes target disjoint paths —
-    # run them concurrently (r17, guide §2.6); callers' ledger/meta
-    # commit markers stay strictly after both complete
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        for f in (
-            ex.submit(_write_artifact, posting, index_path, "postings", batch_id, "t", "b"),
-            ex.submit(_write_artifact, vectors, index_path, "vectors", batch_id),
-        ):
-            f.result()
+    # (_postings_and_vectors), so the two writes run concurrently
+    _write_artifacts(index_path, batch_id, [
+        (posting, "postings", "t", "b"), (vectors, "vectors", None, None),
+    ])
 
 
 _SUBTREES = ("postings", "vectors")
@@ -207,38 +196,21 @@ def extend_neardup_index(
     meta-pinned planes, ledger-committed, replay-idempotent,
     tombstone-guarded and id-type-guarded like every other store
     delivery.  ``id_col``/``vec_col`` override the meta column names."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
-        return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(spark, index_path)
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
+
+    def write(df: DataFrame, meta, bid: str) -> None:
+        # the vector type is normalized to the base's (r17, same as
+        # extend_ivf_index): see retrieval._cast_to_base
+        df = _cast_to_base(df, index_path, "vectors", "v", meta.vec_col)
+        posting, vectors = _postings_and_vectors(
+            df, meta.id_col, meta.vec_col,
+            int(meta.n_planes), int(meta.n_tables), int(meta.dim),
         )
-    _guard_delivery_id_type(df, meta.id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(df.select(meta.id_col), index_path, meta.id_col)
-    # normalize the delivery's vector type to the BASE's (r17, same as
-    # extend_ivf_index): a widened delivery would land a physically
-    # heterogeneous vectors tree, which the schema-pinned loads refuse
-    base_vec_type = dict(
-        spark.read.parquet(f"{index_path}/vectors/batch=base").dtypes
-    ).get("v")
-    if (
-        base_vec_type is not None
-        and dict(df.dtypes)[meta.vec_col] != base_vec_type
-    ):
-        df = df.withColumn(meta.vec_col, F.col(meta.vec_col).cast(base_vec_type))
-    posting, vectors = _postings_and_vectors(
-        df, meta.id_col, meta.vec_col,
-        int(meta.n_planes), int(meta.n_tables), int(meta.dim),
+        _write_batch(index_path, bid, posting, vectors)
+
+    _extend_store(
+        df, index_path, batch_id, write,
+        names={"id_col": id_col, "vec_col": vec_col},
     )
-    _write_batch(index_path, batch_id, posting, vectors)
-    ledger_commit(spark, index_path, batch_id)
 
 
 def delete_from_neardup_index(
@@ -266,11 +238,7 @@ def compact_neardup_index(
 
     def load(committed: list[str]) -> dict:
         def tree(sub: str, *cols: str) -> DataFrame:
-            return (
-                committed_tree(spark, index_path, sub)
-                .filter(F.col("batch").isin(committed))
-                .select(*cols)
-            )
+            return _read_committed(spark, index_path, sub, committed).select(*cols)
 
         return {
             "postings": (tree("postings", "id", "t", "b"), "id"),
@@ -307,22 +275,17 @@ def matched_against_neardup_index(
     nid = id_col or meta.id_col
     nvec = vec_col or meta.vec_col
     committed = _committed_batches(spark, index_path)
-    ref_post = (
-        committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(F.col("id").alias("rid"), "t", "b")
+    # the verify side rides the postings prune: a tombstoned id has no
+    # surviving posting row, so its vector can never be re-fetched
+    ref_post = _live_rows(
+        spark, index_path,
+        _read_committed(spark, index_path, "postings", committed)
+        .select(F.col("id").alias("rid"), "t", "b"),
+        "rid", meta.id_type, committed,
     )
-    ref_vecs = (
-        committed_tree(spark, index_path, "vectors")
-        .filter(F.col("batch").isin(committed))
-        .select(F.col("id").alias("rid"), F.col("v").alias("__rv__"))
+    ref_vecs = _read_committed(spark, index_path, "vectors", committed).select(
+        F.col("id").alias("rid"), F.col("v").alias("__rv__")
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        dead = tomb.withColumnRenamed("doc", "rid")
-        ref_post = ref_post.join(dead, "rid", "left_anti")
-        # the verify side rides the postings prune: a tombstoned id has no
-        # surviving posting row, so its vector can never be re-fetched
     new_post, new_vecs = _postings_and_vectors(
         new_df.select(
             F.col(nid).alias(meta.id_col), F.col(nvec).alias(meta.vec_col)

@@ -76,6 +76,16 @@ def bm25_scores(
     # them is cheap and caps the plan at two corpus scans (stats + postings).
     tf = tf.localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    return _sum_nanos(_term_nanos(tf, dfreq, stats, k1, b), id_col)
+
+
+def _term_nanos(
+    tf: DataFrame, dfreq: DataFrame, stats: DataFrame, k1: float, b: float
+) -> DataFrame:
+    """The ONE BM25 contribution: ``tf`` rows (..., term, tf, dl) gain
+    ``__nano__``, the per-(doc, term) Okapi contribution in integer nanos,
+    from the broadcast ``(term, df)`` table and the one-row
+    ``(n_docs, avgdl)`` corpus stats."""
     k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
     idf = F.log(
         F.lit(1.0)
@@ -87,15 +97,20 @@ def bm25_scores(
         * (k1_l + 1.0)
         / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
     )
-    scored = (
+    return (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
     )
+
+
+def _sum_nanos(scored: DataFrame, *keys: str) -> DataFrame:
+    """Per-``keys`` BM25 score: the exact long sum of the nano
+    contributions, displayed at 6 decimals."""
     return (
-        scored.groupBy(id_col)
+        scored.groupBy(*keys)
         .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
-        .select(F.col(id_col), F.round("__raw__", 6).alias("bm25"))
+        .select(*keys, F.round("__raw__", 6).alias("bm25"))
     )
 
 
@@ -213,13 +228,23 @@ def build_text_index(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    batch_id: int | str = "base",
-    _clear: bool = True,
 ) -> None:
-    """Build (or, via :func:`extend_text_index`, append to) the persisted
-    BM25 index.  Idempotent: each artifact writes through the root
-    (clearing stale extension batches on a rebuild) or overwrites its own
-    ``batch=`` partition on extension replay."""
+    """Build the persisted BM25 index.  Idempotent: each artifact writes
+    through the root, clearing stale extension batches on a rebuild;
+    :func:`extend_text_index` appends deliveries."""
+    frames = _text_batch(docs, text_col, id_col)
+    _write_store_base(
+        docs.sparkSession, index_path, _TEXT_SUBTREES,
+        lambda root: _write_text_batch(root, "base", *frames),
+        (dict(docs.dtypes)[id_col], N_TERM_BUCKETS), _TEXT_META,
+    )
+
+
+def _text_batch(
+    docs: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The (postings, dfreq, stats, doclens) artifacts of one BM25 batch,
+    base or delivery, with postings and doclens already materialized."""
     from chat_data_pipeline_spark.functions.scoring import token_bucket
 
     spark = docs.sparkSession
@@ -270,22 +295,7 @@ def build_text_index(
         [(int(obs.get["n"] or 0), int(obs.get["s"] or 0))],
         "n_docs long, sum_dl long",
     )
-    id_type = dict(docs.dtypes)[id_col]
-    if _clear:  # base build: every old batch is cleared in the meta-less window
-        _write_store_base(
-            spark, index_path, _TEXT_SUBTREES,
-            lambda root: _write_text_batch(root, "base", postings, dfreq, stats, dlens),
-            (id_type, N_TERM_BUCKETS), _TEXT_META,
-        )
-    else:  # extension: overwrite only this delivery's partition
-        _write_text_batch(index_path, batch_id, postings, dfreq, stats, dlens)
-        # the delivery's commit marker is written LAST: a crash mid-delivery
-        # (postings landed, df/stats didn't) must leave the batch INVISIBLE
-        # to probes — BM25's exactness claim depends on the three artifacts
-        # agreeing, so probes read only ledger-committed batches and a
-        # half-delivered batch can't silently skew df against tf.  Replay
-        # with the same id overwrites the partial artifacts and re-commits.
-        ledger_commit(spark, index_path, batch_id)
+    return postings, dfreq, stats, dlens
 
 
 _TEXT_SUBTREES = ("postings", "dfreq", "stats", "doclens")
@@ -320,21 +330,26 @@ def _write_text_batch(
     index_path: str, batch_id: str, postings: DataFrame, dfreq: DataFrame,
     stats: DataFrame, dlens: DataFrame,
 ) -> None:
-    """The four BM25 artifacts of one batch (``base`` or a delivery).  They
-    land at disjoint paths from already-materialized inputs, so they are
-    written concurrently (r17, guide §2.6); the caller's ledger/meta commit
-    marker lands strictly after all four."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
+    """The four BM25 artifacts of one batch (``base`` or a delivery)."""
+    _write_artifacts(index_path, batch_id, [
         (postings, "postings", "bkt", "term"),
         (dfreq, "dfreq", "bkt", "term"),
         (stats, "stats", None, None),
         (dlens, "doclens", None, None),
-    )
-    with ThreadPoolExecutor(max_workers=4) as ex:
+    ])
+
+
+def _write_artifacts(root: str, batch_id: str, writes: list) -> None:
+    """Several artifacts of one batch, each ``(df, sub, part, salt_col)``
+    as :func:`_write_artifact` takes them.  They land at disjoint paths
+    from already-materialized inputs, so they are written concurrently
+    (r17, guide §2.6); the caller's ledger/meta commit marker lands
+    strictly after all of them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
         for f in [
-            ex.submit(_write_artifact, df, index_path, sub, batch_id, part, salt)
+            ex.submit(_write_artifact, df, root, sub, batch_id, part, salt)
             for df, sub, part, salt in writes
         ]:
             f.result()
@@ -478,20 +493,35 @@ def _fold_compact(
     the resolved id type, which a pre-r15 IVF meta lacks)."""
     committed = _committed_batches(spark, index_path)
     id_type = _store_id_type(spark, index_path, meta)
-    tomb = _tombstoned_ids(spark, index_path, id_type, committed)
-    frames = {}
-    for name, (df, id_col) in load(committed).items():
-        if tomb is not None and id_col:
-            df = df.join(tomb.withColumnRenamed("doc", id_col), id_col, "left_anti")
-        frames[name] = df
-    if dst_index is None:
-        frames = {n: f.localCheckpoint(eager=True) for n, f in frames.items()}
-        dst_index = index_path
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
+    frames, dst_index = _fold_live(
+        spark, index_path, dst_index, id_type, committed, load(committed)
+    )
     _write_store_base(
         spark, dst_index, subtrees, lambda root: write(root, frames),
         {**meta.asDict(), "id_type": id_type}, meta_schema, clear_folded=False,
     )
+
+
+def _fold_live(
+    spark, index_path: str, dst_index: str | None, id_type: str,
+    committed: list[str], frames: dict,
+) -> tuple[dict, str]:
+    """The part of a base rewrite every compaction and every IVF rebuild
+    shares, run before the rewrite: each ``{name: (frame, id column or
+    None)}`` frame loses its tombstoned ids, the frames are pinned with an
+    eager localCheckpoint when rewriting in place (the anti-joins read
+    this root's tombstones, which the rewrite deletes), and the folded
+    manifest lands at the destination.  Returns ``({name: frame}, dst)``."""
+    tomb = _tombstoned_ids(spark, index_path, id_type, committed)
+    frames = {
+        name: _drop_ids(df, id_col, tomb) if id_col else df
+        for name, (df, id_col) in frames.items()
+    }
+    if dst_index is None:
+        frames = {n: f.localCheckpoint(eager=True) for n, f in frames.items()}
+        dst_index = index_path
+    _fold_manifest_forward(spark, index_path, dst_index, committed)
+    return frames, dst_index
 
 
 def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> None:
@@ -512,16 +542,13 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
     is that pointer as an operator)."""
     meta = read_meta_row(spark, index_path)
 
-    def read(sub: str, schema: str, committed: list[str]) -> DataFrame:
-        return (
-            spark.read.schema(schema).parquet(f"{index_path}/{sub}")
-            .filter(F.col("batch").isin(committed))
-        )
-
     def load(committed: list[str]) -> dict:
+        def read(sub: str, schema: str) -> DataFrame:
+            return _read_committed(spark, index_path, sub, committed, schema)
+
         p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
         dfreq = (
-            read("dfreq", "term string, df long", committed)
+            read("dfreq", "term string, df long")
             .groupBy("bkt", "term")
             .agg(F.sum("df").cast("long").alias("df"))
             # a fully-deleted term nets to df=0 (its positive build/extension
@@ -532,12 +559,12 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
         # df/stats rows cancel in the net sums
         return {
             "postings": (
-                read("postings", p_schema, committed)
+                read("postings", p_schema)
                 .select("doc", "dl", "term", "tf", "bkt"), "doc",
             ),
             "dfreq": (dfreq, None),
             "doclens": (
-                read("doclens", f"doc {meta.id_type}, dl int", committed)
+                read("doclens", f"doc {meta.id_type}, dl int")
                 .select("doc", "dl"), "doc",
             ),
         }
@@ -577,23 +604,52 @@ def extend_text_index(
     tombstones, then re-deliver.  The guard costs nothing until the index
     has seen a delete (one directory existence check), then one
     delivery-sized semi-join per delivery."""
+    _extend_store(
+        docs, index_path, batch_id,
+        lambda df, _meta, bid: _write_text_batch(
+            index_path, bid, *_text_batch(df, text_col, id_col)
+        ),
+        id_col=id_col,
+    )
+
+
+def _extend_store(
+    df: DataFrame, index_path: str, batch_id: int | str, write,
+    id_col: str | None = None, names: dict | None = None, check=None,
+) -> None:
+    """The ONE extension sequence behind every store kind's ``extend_*``;
+    the kind supplies only ``write(df, meta, batch_id)``, its delivery
+    write, and optionally ``check(meta)``, which refuses a root of the
+    wrong kind.
+
+    Sequence: the batch id is validated → the spent-id guard (a folded
+    same-kind replay returns: the base already holds this delivery) → the
+    cross-kind guard against ``tombstones/`` (an id that names a delete
+    must not be reused by an extension) → one meta read → ``check`` →
+    ``names`` (meta column-name field → the caller's override or None)
+    aliases the delivered columns onto the meta names when any override is
+    given, so config-driven callers need not pre-read meta → the id-type
+    guard against the store's id type → the tombstoned-delivery guard on
+    the id column (``id_col``, or meta's for kinds whose meta names it) →
+    ``write`` → the ledger commit LAST.  A crash mid-delivery leaves the
+    batch invisible to probes (BM25's exactness depends on its artifacts
+    agreeing), and a replay with the same id overwrites its own
+    partitions and re-commits."""
     bid = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(docs.sparkSession, index_path, bid, "extension"):
+    spark = df.sparkSession
+    if _guard_spent_batch_id(spark, index_path, bid, "extension"):
         return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        docs.sparkSession, index_path, bid, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(docs.sparkSession, index_path)
-    _guard_delivery_id_type(docs, id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(docs, index_path, id_col)
-    build_text_index(
-        docs,
-        index_path,
-        text_col,
-        id_col,
-        batch_id=bid,
-        _clear=False,
-    )
+    _guard_batch_id_kind(spark, index_path, bid, "tombstones", "extension", "delete")
+    meta = read_meta_row(spark, index_path)
+    if check is not None:
+        check(meta)
+    if names and any(names.values()):
+        df = df.select(*[F.col(o or meta[f]).alias(meta[f]) for f, o in names.items()])
+    id_col = id_col or meta.id_col
+    _guard_delivery_id_type(df, id_col, _store_id_type(spark, index_path, meta), index_path)
+    _guard_tombstoned_delivery(df, index_path, id_col)
+    write(df, meta, bid)
+    ledger_commit(spark, index_path, bid)
 
 
 def _guard_batch_id_kind(
@@ -649,8 +705,8 @@ def _guard_delivery_id_type(
 
 
 def _guard_tombstoned_delivery(docs: DataFrame, index_path: str, id_col: str) -> None:
-    """Raise if any delivered id is currently tombstoned (shared by the
-    text and IVF extension paths)."""
+    """Raise if any delivered id is currently tombstoned (one step of
+    :func:`_extend_store`)."""
     spark = docs.sparkSession
     fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
     if not fs.exists(tpath):
@@ -690,12 +746,30 @@ def _tombstoned_ids(
     if not fs.exists(tpath):
         return None
     batches = [b for b in committed if b != exclude_batch]
-    return (
-        spark.read.schema(f"doc {id_type}")
-        .parquet(f"{index_path}/tombstones")
-        .filter(F.col("batch").isin(batches))
-        .select("doc")
+    return _read_committed(
+        spark, index_path, "tombstones", batches, f"doc {id_type}"
+    ).select("doc")
+
+
+def _live_rows(
+    spark, index_path: str, df: DataFrame, id_col: str, id_type: str,
+    committed: list[str],
+) -> DataFrame:
+    """``df`` minus the ledger-committed tombstoned ids on ``id_col``.
+    Tombstoned rows stay physical until compaction; this anti-join hides
+    them from every probe, and it is a no-op (no join at all) on a store
+    that has never seen a delete."""
+    return _drop_ids(
+        df, id_col, _tombstoned_ids(spark, index_path, id_type, committed)
     )
+
+
+def _drop_ids(df: DataFrame, id_col: str, tomb: DataFrame | None) -> DataFrame:
+    """``df`` anti-joined on ``id_col`` with the ``doc`` ids of ``tomb``
+    (a :func:`_tombstoned_ids` result); ``None`` leaves ``df`` as is."""
+    if tomb is None:
+        return df
+    return df.join(tomb.withColumnRenamed("doc", id_col), id_col, "left_anti")
 
 
 def delete_from_text_index(
@@ -737,10 +811,8 @@ def delete_from_text_index(
 
     def negatives(want: DataFrame, committed: list[str], id_type: str, bid: str):
         def victims(sub: str, schema: str) -> DataFrame:
-            return (
-                spark.read.schema(schema).parquet(f"{index_path}/{sub}")
-                .filter(F.col("batch").isin(committed))
-                .join(want, "doc", "left_semi")
+            return _read_committed(spark, index_path, sub, committed, schema).join(
+                want, "doc", "left_semi"
             )
 
         neg_df = victims(
@@ -763,9 +835,9 @@ def _store_id_type(spark, index_path: str, meta) -> str:
     the footers of a crashed uncommitted delivery's partial files; the
     base is complete by construction, its commit marker being the meta
     write."""
-    return meta.asDict().get("id_type") or dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    )[meta.id_col]
+    return meta.asDict().get("id_type") or _base_type(
+        spark, index_path, "postings", meta.id_col
+    )
 
 
 def _deliver_tombstones(
@@ -1008,20 +1080,46 @@ def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
     probe/compaction paths that hit this are exactly what an operator
     runs right after a crash.  The base partition is complete by
     construction (its commit marker is the meta write), so its schema is
-    authoritative; callers still filter to the ledger-committed batches,
-    which prunes the debris partitions before any data is read.  One
-    tiny footer read on the base replaces tree-wide sampling — same
-    discipline as maintenance.py's explicit-schema reads."""
-    from pyspark.sql.types import IntegerType, StringType
+    authoritative; callers still filter to the ledger-committed batches
+    (:func:`_read_committed`), which prunes the debris partitions before
+    any data is read — same discipline as maintenance.py's
+    explicit-schema reads."""
+    from pyspark.sql.types import StringType
+
+    schema = _base_schema(spark, index_path, sub)
+    if "batch" not in schema.fieldNames():
+        schema = schema.add("batch", StringType())
+    return spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+
+
+def _read_committed(
+    spark, index_path: str, sub: str, committed: list[str],
+    schema: str | None = None,
+) -> DataFrame:
+    """The ONE committed-batch read of a store artifact: ``sub`` under an
+    explicit ``schema`` (or, when None, the base-pinned
+    :func:`committed_tree` schema), restricted to the ``committed``
+    batches.  ``batch`` is a partition column, so the filter prunes at the
+    file listing: a crashed delivery's partial files are never opened."""
+    reader = (
+        committed_tree(spark, index_path, sub)
+        if schema is None
+        else spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+    )
+    return reader.filter(F.col("batch").isin(committed))
+
+
+def _base_schema(spark, index_path: str, sub: str):
+    """The schema of ``<sub>/batch=base`` with its nested partition
+    columns, derived driver-side (r17) from one base part file's footer
+    plus the partition dirs walked to reach it (our artifact layouts nest
+    at most bkt=<int> / band=<int> under batch=).  Anything unexpected
+    falls back to schema inference over the base partition, which costs
+    a Spark job; a missing base fails there exactly like that read."""
+    from pyspark.sql.types import IntegerType
 
     schema = None
     try:
-        # driver-side schema (r17): the base read above existed ONLY for
-        # its schema, yet paid a schema-inference Spark job per call.
-        # Derive the same schema from one base part file's footer plus the
-        # partition dirs walked to reach it (our artifact layouts nest at
-        # most bkt=<int> / band=<int> under batch=); anything unexpected
-        # falls back to the inference read below, unchanged.
         import re as _re
 
         from chat_data_pipeline_spark.session import local_parquet_schema
@@ -1054,11 +1152,30 @@ def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
     except Exception:  # noqa: BLE001 — any surprise: inference path below
         schema = None
     if schema is None:
-        base = spark.read.parquet(f"{index_path}/{sub}/batch=base")
-        schema = base.schema
-    if "batch" not in schema.fieldNames():
-        schema = schema.add("batch", StringType())
-    return spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+        schema = spark.read.parquet(f"{index_path}/{sub}/batch=base").schema
+    return schema
+
+
+def _base_type(spark, index_path: str, sub: str, col: str) -> str | None:
+    """``col``'s type in ``<sub>/batch=base`` (see :func:`_base_schema`),
+    or None when the base has no such column."""
+    schema = _base_schema(spark, index_path, sub)
+    return schema[col].dataType.simpleString() if col in schema.fieldNames() else None
+
+
+def _cast_to_base(
+    df: DataFrame, index_path: str, sub: str, base_col: str, col: str
+) -> DataFrame:
+    """Cast the delivered ``col`` to the type ``base_col`` has in the
+    base partition of ``sub`` (r17).  A double-typed delivery over a float
+    base (e.g. a drift transform's literal arithmetic widening the column)
+    would otherwise land a physically heterogeneous tree, which the
+    schema-pinned loads, and any columnar reader expecting one physical
+    type per column, refuse."""
+    base = _base_type(df.sparkSession, index_path, sub, base_col)
+    if base is not None and dict(df.dtypes)[col] != base:
+        df = df.withColumn(col, F.col(col).cast(base))
+    return df
 
 
 def swap_index_alias(spark, alias_path: str, index_path: str) -> None:
@@ -1254,42 +1371,49 @@ def bm25_topk_indexed(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = [t.lower() for t in query_terms]
+    out = _sum_nanos(_indexed_term_nanos(spark, index_path, terms, id_col, k1, b), id_col)
+    if k is not None:
+        out = out.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(int(k))
+    return out
+
+
+def _indexed_term_nanos(
+    spark, index_path: str, terms: list[str], id_col: str, k1: float, b: float
+) -> DataFrame:
+    """``(id_col, term, __nano__)`` for every live posting of ``terms`` —
+    the per-(doc, term) table both indexed probes score from.  The terms'
+    md5 buckets become a LITERAL ``IN`` on the ``bkt`` partition column,
+    so the pruned reads list only the probed bkt dirs of COMMITTED batches
+    and open nothing else (batch and bkt are both partition columns: two
+    literal INs at the listing); explicit schemas from meta mean zero
+    footer sampling.  The batch dimension merges by integer addition."""
     bkts = sorted({_term_bucket_py(t) for t in terms})
     meta = read_meta_row(spark, index_path)
     committed = _committed_batches(spark, index_path)
-    # explicit schemas (from meta): zero footer sampling — the pruned read
-    # lists only the probed bkt dirs of COMMITTED batches and opens nothing
-    # else (batch and bkt are both partition columns: two literal INs at
-    # the listing)
-    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .select(F.col("doc").alias(id_col), "dl", "term", "tf")
-    )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        # tombstoned docs stay physical until compaction; the anti-join
-        # hides them, while their negative dfreq/stats deliveries subtract
-        # through the cross-batch sums below
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
+
+    def pruned(sub: str, schema: str) -> DataFrame:
+        return (
+            _read_committed(spark, index_path, sub, committed, schema)
+            .filter(F.col("bkt").isin(bkts))
+            .filter(F.col("term").isin(terms))
         )
+
+    # tombstoned docs stay physical until compaction; the anti-join hides
+    # them, while their negative dfreq/stats deliveries subtract through
+    # the cross-batch sums below
+    postings = _live_rows(
+        spark, index_path,
+        pruned("postings", f"doc {meta.id_type}, dl int, term string, tf long")
+        .select(F.col("doc").alias(id_col), "dl", "term", "tf"),
+        id_col, meta.id_type, committed,
+    )
     dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
+        pruned("dfreq", "term string, df long")
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
     stats = (
-        spark.read.schema("n_docs long, sum_dl long")
-        .parquet(f"{index_path}/stats")
-        .filter(F.col("batch").isin(committed))
+        _read_committed(spark, index_path, "stats", committed, "n_docs long, sum_dl long")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("__sum_dl__"),
@@ -1303,30 +1427,7 @@ def bm25_topk_indexed(
             ),
         )
     )
-    k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf
-        * F.col("tf")
-        * (k1_l + 1.0)
-        / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
-    )
-    out = (
-        scored.groupBy(id_col)
-        .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
-        .select(F.col(id_col), F.round("__raw__", 6).alias("bm25"))
-    )
-    if k is not None:
-        out = out.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(int(k))
-    return out
+    return _term_nanos(postings, dfreq, stats, k1, b).select(id_col, "term", "__nano__")
 
 
 def bm25_topk_indexed_batch(
@@ -1358,8 +1459,6 @@ def bm25_topk_indexed_batch(
     Output: ``(query_id, id_col, bm25, rank)`` with rank ≤ k, ties broken
     by ascending id — per-(doc, term) scores are bit-identical to
     :func:`bm25_topk_indexed` over the same index."""
-    from pyspark.sql import Window
-
     # guard and collect in ONE job: the limit bounds the driver transfer
     # even when the input is over the cap, and len() replaces a separate
     # count() action (a whole extra scan on every serving call)
@@ -1387,7 +1486,6 @@ def bm25_topk_indexed_batch(
             f"bm25_topk_indexed_batch: no query terms for rows {empty[:10]}"
         )
     terms = sorted({t for _, ts in qterms for t in ts})
-    bkts = sorted({_term_bucket_py(t) for t in terms})
     from chat_data_pipeline_spark.session import values_df
 
     qt = values_df(
@@ -1395,75 +1493,26 @@ def bm25_topk_indexed_batch(
         [(qid, t) for qid, ts in qterms for t in ts],
         f"{query_id_col} {dict(queries.dtypes)[query_id_col]}, term string",
     )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .select(F.col("doc").alias(id_col), "dl", "term", "tf")
-    )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    stats = (
-        spark.read.schema("n_docs long, sum_dl long")
-        .parquet(f"{index_path}/stats")
-        .filter(F.col("batch").isin(committed))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("__sum_dl__"),
-        )
-        .select(
-            "n_docs",
-            (F.col("__sum_dl__").cast("double") / F.col("n_docs").cast("double")).alias(
-                "avgdl"
-            ),
-        )
-    )
-    k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf
-        * F.col("tf")
-        * (k1_l + 1.0)
-        / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
-    )
-    per_term = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
-        .select(id_col, "term", "__nano__")
-    )
-    scored = (
-        per_term.join(F.broadcast(qt), "term")
-        .groupBy(query_id_col, id_col)
-        .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
-        .select(query_id_col, id_col, F.round("__raw__", 6).alias("bm25"))
-    )
+    per_term = _indexed_term_nanos(spark, index_path, terms, id_col, k1, b)
+    scored = _sum_nanos(per_term.join(F.broadcast(qt), "term"), query_id_col, id_col)
+    return _rank_per_query(scored, query_id_col, id_col, "bm25", k)
+
+
+def _rank_per_query(
+    scored: DataFrame, query_id_col: str, id_col: str, score: str, k: int
+) -> DataFrame:
+    """The top ``k`` rows of each query by (``score`` desc, id asc), as
+    ``(query_id_col, id_col, score, rank)``: a window ranked inside each
+    query's partition, never a global sort."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy(query_id_col).orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
+        F.col(score).desc(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(k))
-        .select(query_id_col, id_col, "bm25", "rank")
+        .select(query_id_col, id_col, score, "rank")
     )
 
 
@@ -1526,9 +1575,7 @@ def _batch_health(spark, index_path: str, meta, parts: list) -> DataFrame:
             )
         else:
             part = (
-                spark.read.schema(schema)
-                .parquet(f"{index_path}/{sub}")
-                .filter(F.col("batch").isin(committed))
+                _read_committed(spark, index_path, sub, committed, schema)
                 .groupBy(F.col("batch").cast("string").alias("batch"))
                 .agg(*[a.cast("long").alias(n) for a, n in zip(aggs, names)])
             )

@@ -19,22 +19,20 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators.dedup import connected_components_min_label
 from chat_data_pipeline_spark.operators.retrieval import (
+    _cast_to_base,
     _committed_batches,
     _deliver_tombstones,
+    _extend_store,
     _fold_compact,
-    _fold_manifest_forward,
-    _guard_batch_id_kind,
+    _fold_live,
     _guard_delivery_id_type,
-    _guard_spent_batch_id,
-    _guard_tombstoned_delivery,
+    _live_rows,
+    _rank_per_query,
+    _read_committed,
     _store_id_type,
-    _tombstoned_ids,
     _write_artifact,
     _write_store_base,
-    committed_tree,
-    ledger_commit,
     read_meta_row,
-    validate_batch_id,
 )
 
 
@@ -119,14 +117,7 @@ def brute_force_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_per_query(scored, query_id_col, id_col, "cosine", k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -234,14 +225,7 @@ def lsh_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_per_query(scored, query_id_col, id_col, "cosine", k)
 
 
 def _sample_mat(
@@ -416,14 +400,7 @@ def ivf_topk(
     ).select(
         F.col("id1").alias(query_id_col), F.col("id2").alias(id_col), "cosine"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_per_query(scored, query_id_col, id_col, "cosine", k)
 
 
 def train_pq_codebooks(
@@ -611,14 +588,7 @@ def pq_topk(
         scan,
         schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "approx_cosine", k)
 
 
 def ivf_pq_topk(
@@ -729,40 +699,18 @@ def ivf_pq_topk(
             lst = batch["list"].to_numpy()
             codes = np.stack([np.asarray(c) for c in batch["pq_code"]])
             cols = np.arange(codes.shape[1])
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lst, prb[qi])
-                if not mask.any():
-                    continue
-                # Rounded-then-cut with id tie-break — see pq_topk's scan for
-                # why (partition-invariance at rounding-tie boundaries).
-                sc = np.round(
-                    bs[qi][lst[mask]]
-                    + tables[qi][cols[None, :], codes[mask]].sum(axis=1),
-                    6,
-                )
-                midx = np.nonzero(mask)[0]
-                top = np.lexsort((vids[midx], -sc))[: min(k, int(mask.sum()))]
-                sel = midx[top]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[sel])
-                out_s.extend(sc[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
+            yield _probed_topk(
+                ids_q, prb, lst, vids, k,
+                lambda qi, midx: bs[qi][lst[midx]]
+                + tables[qi][cols[None, :], codes[midx]].sum(axis=1),
+                (query_id_col, id_col, "approx_cosine"),
             )
 
     candidates = encoded.mapInPandas(
         scan,
         schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "approx_cosine", k)
 
 
 def _score_candidate_pairs(
@@ -1233,6 +1181,72 @@ def _fold_norm_rows(mat: np.ndarray) -> np.ndarray:
     return np.maximum(np.sqrt(acc), 1e-12)
 
 
+def _coarse_probes(qmat: np.ndarray, coarse: np.ndarray, n_probe: int):
+    """``(qn, qdots, probes)``: the fold-normalized queries, their fold-dots
+    against the ``coarse`` codebook, and each query's ``n_probe`` closest
+    lists — score desc, index asc on ties (np.lexsort with the negated,
+    exact dots mirrors the oracle's ROW_NUMBER order)."""
+    n_centroids = len(coarse)
+    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
+    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
+    probes = np.stack(
+        [np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe] for i in range(len(qn))]
+    ) if len(qn) else np.zeros((0, n_probe), dtype=np.int64)
+    return qn, qdots, probes
+
+
+def _probed_topk(ids_q, probes, lists, vids, k: int, score, names):
+    """One Arrow batch's local top-``k`` per query for the IVF scans, as a
+    pandas frame with the ``names`` (query id, id, score) columns: query
+    ``qi`` sees the rows whose ``lists`` entry it probes, and
+    ``score(qi, midx)`` is the flavor's arithmetic over those rows.
+    Scores round to 6 dp BEFORE the cut and ties go to the lower id —
+    the global window's (rounded desc, id asc) order, so every partition
+    cuts the same way (partition invariance at rounding-tie boundaries)."""
+    import pandas as pd
+
+    out_q, out_v, out_s = [], [], []
+    for qi in range(len(ids_q)):
+        mask = np.isin(lists, probes[qi])
+        if not mask.any():
+            continue
+        midx = np.nonzero(mask)[0]
+        scores = np.round(score(qi, midx), 6)
+        top = np.lexsort((vids[midx], -scores))[: min(k, len(midx))]
+        out_q.extend([ids_q[qi]] * len(top))
+        out_v.extend(vids[midx[top]])
+        out_s.extend(scores[top])
+    return pd.DataFrame(dict(zip(names, (out_q, out_v, out_s))))
+
+
+def _fold_dot(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Row dots with ``q`` as an ordered columnwise fold — the SRP twin's
+    verify arithmetic, bit-identical to DuckDB's list_reduce."""
+    acc = np.zeros(len(mat))
+    for t in range(len(q)):
+        acc = acc + mat[:, t] * q[t]
+    return acc
+
+
+def _lut_fold(coarse_dots: np.ndarray, luts: np.ndarray, lists, codes) -> np.ndarray:
+    """IVF-PQ approximate cosine: the base coarse dot of each row's list,
+    then its m residual LUT entries added left to right."""
+    acc = coarse_dots[lists].copy()
+    for j in range(len(luts)):
+        acc = acc + luts[j][codes[:, j]]
+    return acc
+
+
+def _pq_luts(qn: np.ndarray, books: np.ndarray, dsub: int) -> np.ndarray:
+    """(queries, m, codewords) residual lookup tables: each query's fold
+    dots against every subspace codebook."""
+    if not len(qn):
+        return np.zeros((0, len(books), books.shape[1]))
+    return np.stack(
+        [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(len(books))], axis=1
+    )
+
+
 def _fold_subspace_dots(mat: np.ndarray, signs: np.ndarray, offset: int) -> np.ndarray:
     """``(n_rows, k)`` inner products of ``mat[:, offset:offset+dsub]``
     against ``k`` ±1 codewords, accumulated column-by-column so every scalar
@@ -1289,13 +1303,7 @@ def pq_topk_md5(
         raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
     qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
     # LUT[q, j, c] = <q_sub_j, book_{j,c}> — same columnwise fold as encode
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m, n_codewords))
-    )
+    luts = _pq_luts(qn, books, dsub)
     bcast = df.sparkSession.sparkContext.broadcast((qids, luts))
     q_type = dict(queries.dtypes)[query_id_col]
     id_type = dict(df.dtypes)[id_col]
@@ -1338,14 +1346,7 @@ def pq_topk_md5(
         scan,
         schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "approx_cosine", k)
 
 
 def ivf_topk_md5(
@@ -1372,8 +1373,6 @@ def ivf_topk_md5(
     Plan shape: one fused Arrow pass (assign + probe-mask + score +
     per-partition top-k) then the global rank window — the corpus is never
     shuffled at full width, scan fraction ≈ n_probe/n_centroids."""
-    import pandas as pd
-
     _guard_query_rows(queries, max_query_rows, "ivf_topk_md5")
     coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
 
@@ -1382,11 +1381,7 @@ def ivf_topk_md5(
     qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
     if len(qmat) and qmat.shape[1] != dim:
         raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    probes = np.stack(
-        [np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe] for i in range(len(qn))]
-    ) if len(qn) else np.zeros((0, n_probe), dtype=np.int64)
+    qn, _qdots, probes = _coarse_probes(qmat, coarse, n_probe)
     bcast = df.sparkSession.sparkContext.broadcast((qids, probes, qn))
     q_type = dict(queries.dtypes)[query_id_col]
     id_type = dict(df.dtypes)[id_col]
@@ -1403,38 +1398,16 @@ def ivf_topk_md5(
                 raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
             normed = mat / _fold_norm_rows(mat)[:, None]
             lists = np.argmax(_fold_subspace_dots(normed, coarse, 0), axis=1)
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                # ordered fold cosine against the (normalized) query — same
-                # columnwise-fold arithmetic as the SRP twin's verify
-                acc = np.zeros(len(midx))
-                sub = normed[midx]
-                for t in range(dim):
-                    acc = acc + sub[:, t] * qnorm[qi][t]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "cosine": out_s}
+            yield _probed_topk(
+                ids_q, prb, lists, vids, kk,
+                lambda qi, midx: _fold_dot(normed[midx], qnorm[qi]),
+                (query_id_col, id_col, "cosine"),
             )
 
     candidates = df.select(id_col, vec_col).mapInPandas(
         scan, schema=f"{query_id_col} {q_type}, {id_col} {id_type}, cosine double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "cosine", k)
 
 
 # --- persisted IVF index (r12) ----------------------------------------------
@@ -1493,13 +1466,7 @@ def build_ivf_index(
         # in-place rebuild crashing right after them must not leave OLD
         # meta + OLD postings + NEW centroids for probes to score against
         if centroids is not None:
-            from chat_data_pipeline_spark.session import values_df
-
-            values_df(
-                spark,
-                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-                "list int, centroid array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
+            _write_centroids(spark, root, centroids)
         # the base lands under batch=base so the tree is uniformly two-level
         # (batch=*/list=*) and later extend_ivf_index deliveries interleave
         # without producing the mixed root layout partition discovery
@@ -1516,6 +1483,33 @@ def build_ivf_index(
 
 
 _IVF_SUBTREES = ("postings", "centroids")
+_CENTROIDS_SCHEMA = "list int, centroid array<double>"
+
+
+def _write_centroids(spark, root: str, centroids: np.ndarray) -> None:
+    """The kmeans flavor's ``centroids/`` artifact: one file of
+    ``(list, centroid)`` rows."""
+    from chat_data_pipeline_spark.session import values_df
+
+    values_df(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        _CENTROIDS_SCHEMA,
+    ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
+
+
+def _load_centroids(spark, root: str) -> np.ndarray:
+    """The kmeans flavor's centroids, row ``i`` = list ``i``.  Read under
+    the explicit schema :func:`_write_centroids` writes: schema inference
+    would cost a Spark job per read."""
+    rows = (
+        spark.read.schema(_CENTROIDS_SCHEMA).parquet(f"{root}/centroids")
+        .orderBy("list")
+        .collect()
+    )
+    return np.asarray([r.centroid for r in rows], dtype=np.float64)
+
+
 _IVF_META = (
     "coarse string, n_centroids int, dim int, id_col string, "
     "vec_col string, id_type string"
@@ -1586,60 +1580,67 @@ def extend_ivf_index(
     extensions as one table (``build_ivf_index`` writes its base under
     ``batch=base`` through the root, which also clears stale extensions on
     a rebuild)."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
-        return  # folded replay: the base already holds this delivery
-    # cross-kind batch-id reuse is refused (same contract as the text
-    # index): replay idempotence is same-kind only
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(spark, index_path)
-    # optional column-name overrides: a caller whose frame uses its own
-    # names aliases here instead of pre-reading meta (one read, not two)
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
+
+    def check(meta) -> None:
+        if meta.coarse not in ("md5", "kmeans"):
+            raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
+
+    def write(df: DataFrame, meta, bid: str) -> None:
+        id_col, vec_col = meta.id_col, meta.vec_col
+        df = _cast_to_base(df, index_path, "postings", vec_col, vec_col)
+        centroids = (
+            _load_centroids(df.sparkSession, index_path)
+            if meta.coarse == "kmeans" else None
         )
-    id_col, vec_col = meta.id_col, meta.vec_col
-    # refuse a wrong-typed delivery up front, not at probe
-    _guard_delivery_id_type(
-        df, id_col, _store_id_type(spark, index_path, meta), index_path
-    )
-    # a delivery containing a tombstoned id is refused (same contract as
-    # extend_text_index): the tombstone would hide the new rows from
-    # probes — compact first, then re-deliver
-    _guard_tombstoned_delivery(df.select(id_col, vec_col), index_path, id_col)
-    # normalize the delivery's vector type to the BASE's (r17): a
-    # double-typed delivery over a float base (e.g. a drift transform's
-    # literal arithmetic widening the column) would otherwise land a
-    # physically heterogeneous tree, which the schema-pinned loads — and
-    # any columnar reader expecting one physical type per column — refuse
-    base_vec_type = dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    ).get(vec_col)
-    if base_vec_type is not None and dict(df.dtypes)[vec_col] != base_vec_type:
-        df = df.withColumn(vec_col, F.col(vec_col).cast(base_vec_type))
-    if meta.coarse == "kmeans":
-        cent = (
-            spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
+        postings = _ivf_postings(
+            df, id_col, vec_col, int(meta.n_centroids), int(meta.dim), centroids
         )
-        centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
-    elif meta.coarse == "md5":
-        centroids = None
-    else:
-        raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    postings = _ivf_postings(
-        df, id_col, vec_col, int(meta.n_centroids), int(meta.dim), centroids
+        # same salted list-clustering as the base build
+        _write_artifact(postings, index_path, "postings", bid, "list", id_col)
+
+    _extend_store(
+        df, index_path, batch_id, write,
+        names={"id_col": id_col, "vec_col": vec_col}, check=check,
     )
-    # same salted list-clustering as the base build; static overwrite
-    # pinned so a replayed delivery fully replaces its batch dir
-    _write_artifact(postings, index_path, "postings", batch_id, "list", id_col)
-    # commit marker LAST: a crashed delivery's partial part-files stay
-    # invisible to probes until a replay completes and re-commits
-    ledger_commit(spark, index_path, batch_id)
+
+
+def _prune_lists(postings: DataFrame, needed: list[int]) -> DataFrame:
+    """``postings`` restricted to the probed ``list`` partitions (a
+    literal ``IN`` prunes at the file listing); no list, no rows."""
+    return postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
+
+
+def _md5_query_probe(
+    queries: DataFrame, query_id_col: str, query_vec_col: str,
+    max_query_rows: int, site: str, n_centroids: int, dim: int, n_probe: int,
+    postings: DataFrame,
+):
+    """Query-side coarse assignment of the persisted md5 IVF and IVF-PQ
+    probes: the queries are guarded and collected in ONE job (serving
+    latency: a separate limit-count guard was a whole extra scan per probe
+    call; the limit bounds the Arrow transfer even for an oversized
+    input), dimension-checked and fold-normalized; each query's
+    ``n_probe`` lists are its highest coarse fold-dots (ties to the lower
+    list), and their union prunes ``postings``.  Returns ``(qids, qn,
+    qdots, probes, pruned)``."""
+    coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
+    qpdf = (
+        queries.select(query_id_col, query_vec_col)
+        .limit(int(max_query_rows) + 1)
+        .toPandas()
+    )
+    if len(qpdf) > max_query_rows:
+        raise ValueError(
+            f"{site}: probe set exceeds max_query_rows={max_query_rows}; "
+            "shard the query set or raise the guard explicitly"
+        )
+    qids = qpdf[query_id_col].to_numpy()
+    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
+    if len(qmat) and qmat.shape[1] != dim:
+        raise ValueError(f"query dim {qmat.shape[1]} != index dim {dim}")
+    qn, qdots, probes = _coarse_probes(qmat, coarse, n_probe)
+    needed = sorted({int(x) for row in probes for x in row})
+    return qids, qn, qdots, probes, _prune_lists(postings, needed)
 
 
 def ivf_topk_persisted(
@@ -1659,72 +1660,25 @@ def ivf_topk_persisted(
     index files are even listed), and candidates score with the flavor's
     own arithmetic, so the output is bit-identical to the corresponding
     build-and-probe path (``ivf_topk_md5`` / ``ivf_topk``)."""
-    import pandas as pd
-
     meta = read_meta_row(spark, index_path)
     committed = _committed_batches(spark, index_path)
+    id_col, vec_col = meta.id_col, meta.vec_col
     # ledger-committed batches only: a crashed delivery's partial
     # part-files are invisible until its replay re-commits
-    postings = committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(committed)
-    )
-    id_col, vec_col = meta.id_col, meta.vec_col
-    tomb = _tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[id_col], committed
-    )
-    if tomb is not None:
-        # deleted vectors stay physical until compaction/rebuild folds them
-        # away; the anti-join hides them from every probe
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
+    postings = _read_committed(spark, index_path, "postings", committed)
+    id_type = dict(postings.dtypes)[id_col]
+    # deleted vectors stay physical until compaction/rebuild folds them
+    # away; the anti-join hides them from every probe
+    postings = _live_rows(spark, index_path, postings, id_col, id_type, committed)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
     q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(postings.dtypes)[id_col]
     kk = int(k)
 
     if meta.coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
+        qids, qn, _qdots, probes, pruned = _md5_query_probe(
+            queries, query_id_col, query_vec_col, max_query_rows,
+            "ivf_topk_persisted", n_centroids, dim, n_probe, postings,
         )
-        # guard and collect in ONE job (serving latency: a separate
-        # limit-count guard was a whole extra scan per probe call) — the
-        # limit bounds the Arrow transfer even for an oversized input
-        qpdf = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(int(max_query_rows) + 1)
-            .toPandas()
-        )
-        if len(qpdf) > max_query_rows:
-            raise ValueError(
-                f"ivf_topk_persisted: probe set exceeds "
-                f"max_query_rows={max_query_rows}; shard the query set or "
-                "raise the guard explicitly"
-            )
-        qids = qpdf[query_id_col].to_numpy()
-        qmat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]]
-        )
-        if len(qmat) and qmat.shape[1] != dim:
-            raise ValueError(f"query dim {qmat.shape[1]} != index dim {dim}")
-        qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-        qdots = (
-            _fold_subspace_dots(qn, coarse_mat, 0)
-            if len(qn)
-            else np.zeros((0, n_centroids))
-        )
-        probes = (
-            np.stack(
-                [
-                    np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe]
-                    for i in range(len(qn))
-                ]
-            )
-            if len(qn)
-            else np.zeros((0, n_probe), dtype=np.int64)
-        )
-        needed = sorted({int(x) for row in probes for x in row})
-        pruned = postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
         bcast = spark.sparkContext.broadcast((qids, probes, qn))
 
         def scan(batches):
@@ -1738,23 +1692,10 @@ def ivf_topk_persisted(
                     [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
                 )
                 normed = mat / _fold_norm_rows(mat)[:, None]
-                out_q, out_v, out_s = [], [], []
-                for qi in range(len(ids_q)):
-                    mask = np.isin(lists, prb[qi])
-                    if not mask.any():
-                        continue
-                    midx = np.nonzero(mask)[0]
-                    acc = np.zeros(len(midx))
-                    sub = normed[midx]
-                    for t in range(dim):
-                        acc = acc + sub[:, t] * qnorm[qi][t]
-                    scores = np.round(acc, 6)
-                    top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                    out_q.extend([ids_q[qi]] * len(top))
-                    out_v.extend(vids[midx[top]])
-                    out_s.extend(scores[top])
-                yield pd.DataFrame(
-                    {query_id_col: out_q, id_col: out_v, "cosine": out_s}
+                yield _probed_topk(
+                    ids_q, prb, lists, vids, kk,
+                    lambda qi, midx: _fold_dot(normed[midx], qnorm[qi]),
+                    (query_id_col, id_col, "cosine"),
                 )
 
         candidates = pruned.select(id_col, vec_col, "list").mapInPandas(
@@ -1765,16 +1706,10 @@ def ivf_topk_persisted(
         # this flavor never driver-collects the queries (they broadcast into
         # the list join), so the limit-count guard stays a separate cheap job
         _guard_query_rows(queries, max_query_rows, "ivf_topk_persisted")
-        cent = (
-            spark.read.parquet(f"{index_path}/centroids")
-            .orderBy("list")
-            .collect()
-        )
-        centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
         probe_df = _ivf_assign_expr(
             queries.select(query_id_col, query_vec_col),
             query_vec_col,
-            centroids,
+            _load_centroids(spark, index_path),
             "__lists__",
             n_probe,
         ).select(
@@ -1784,8 +1719,7 @@ def ivf_topk_persisted(
         needed = sorted(
             r["list"] for r in probe_df.select("list").distinct().collect()
         )
-        pruned = postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
-        pairs = pruned.join(F.broadcast(probe_df), "list").select(
+        pairs = _prune_lists(postings, needed).join(F.broadcast(probe_df), "list").select(
             F.col(query_id_col).alias("id1"),
             F.col(id_col).alias("id2"),
             F.col(query_vec_col).alias("__v1__"),
@@ -1798,14 +1732,7 @@ def ivf_topk_persisted(
         )
     else:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "cosine", k)
 
 
 def ivf_pq_topk_md5(
@@ -1836,8 +1763,6 @@ def ivf_pq_topk_md5(
     (by the same argmax order) are scored — the n_probe/n_centroids scan
     fraction that makes IVF the at-scale path.
     """
-    import pandas as pd
-
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     dsub = dim // m
@@ -1852,20 +1777,8 @@ def ivf_pq_topk_md5(
     qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
     if len(qmat) and qmat.shape[1] != dim:
         raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    # n_probe closest lists: score desc, index asc on ties — np.lexsort with
-    # the negated (exact) dots mirrors the oracle's ROW_NUMBER order
-    probes = np.stack(
-        [np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe] for i in range(len(qn))]
-    ) if len(qn) else np.zeros((0, n_probe), dtype=np.int64)
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m, n_codewords))
-    )
+    qn, qdots, probes = _coarse_probes(qmat, coarse, n_probe)
+    luts = _pq_luts(qn, books, dsub)
     bcast = df.sparkSession.sparkContext.broadcast((qids, probes, qdots, luts))
     q_type = dict(queries.dtypes)[query_id_col]
     id_type = dict(df.dtypes)[id_col]
@@ -1890,36 +1803,17 @@ def ivf_pq_topk_md5(
                 ],
                 axis=1,
             )
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                acc = base[qi][lists[midx]].copy()
-                for j in range(m):
-                    acc = acc + tables[qi][j][codes[midx, j]]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
+            yield _probed_topk(
+                ids_q, prb, lists, vids, kk,
+                lambda qi, midx: _lut_fold(base[qi], tables[qi], lists[midx], codes[midx]),
+                (query_id_col, id_col, "approx_cosine"),
             )
 
     candidates = df.select(id_col, vec_col).mapInPandas(
         scan,
         schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "approx_cosine", k)
 
 
 def hard_negatives_topk(
@@ -2208,8 +2102,8 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
     meta = read_meta_row(spark, index_path)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
     vec_col = meta.vec_col
-    postings = committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(_committed_batches(spark, index_path))
+    postings = _read_committed(
+        spark, index_path, "postings", _committed_batches(spark, index_path)
     )
 
     if meta.coarse == "md5":
@@ -2221,8 +2115,7 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
             return _half_away_micros(dots[np.arange(len(mat)), lists])
 
     elif meta.coarse == "kmeans":
-        rows = spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
-        cent = np.asarray([r.centroid for r in rows], dtype=np.float64)
+        cent = _load_centroids(spark, index_path)
 
         def fit_micros(mat: np.ndarray, lists: np.ndarray) -> np.ndarray:
             d2 = ((mat - cent[lists]) ** 2).sum(axis=1)
@@ -2294,22 +2187,16 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
     # lists either way, so compaction is layout-only for all of them
     payload = "pq_code" if meta.coarse == "md5pq" else meta.vec_col
 
+    # collected before the rewrite window clears centroids/
+    centroids = _load_centroids(spark, index_path) if meta.coarse == "kmeans" else None
+
     def load(committed: list[str]) -> dict:
-        postings = (
-            committed_tree(spark, index_path, "postings")
-            .filter(F.col("batch").isin(committed))
-            .select(meta.id_col, payload, "list")
-        )
-        frames = {"postings": (postings, meta.id_col)}
-        if meta.coarse == "kmeans":
-            frames["centroids"] = (spark.read.parquet(f"{index_path}/centroids"), None)
-        return frames
+        postings = _read_committed(spark, index_path, "postings", committed)
+        return {"postings": (postings.select(meta.id_col, payload, "list"), meta.id_col)}
 
     def write(root: str, f: dict) -> None:
-        if "centroids" in f:
-            f["centroids"].coalesce(1).write.mode("overwrite").parquet(
-                f"{root}/centroids"
-            )
+        if centroids is not None:
+            _write_centroids(spark, root, centroids)
         _write_artifact(f["postings"], root, "postings", "base", "list", meta.id_col)
 
     _fold_compact(
@@ -2367,38 +2254,25 @@ def rebuild_ivf_index(
             "layout maintenance"
         )
     committed = _committed_batches(spark, index_path)
-    union = (
-        committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(meta.id_col, meta.vec_col)
+    union = _read_committed(spark, index_path, "postings", committed).select(
+        meta.id_col, meta.vec_col
     )
-    tomb = _tombstoned_ids(
-        spark, index_path, dict(union.dtypes)[meta.id_col], committed
+    # the retrain must not learn from deleted vectors, and the rebuilt root
+    # makes the deletes physical (build_ivf_index clears the tombstone set
+    # inside its meta-less window).  The spent-id manifest goes through
+    # the ONE shared protocol: the folded batches are classified WHILE
+    # their tombstone dirs still exist, and the manifest lands at dst
+    # BEFORE the new base can serve (r15: a post-meta write left a
+    # crash window with a healthy root and no manifest — exactly the
+    # replay double-count hole it closes).  Early marking is safe: the
+    # marked batches stay ledger-committed in the old root until the
+    # rebuild lands.
+    frames, dst_index = _fold_live(
+        spark, index_path, dst_index, dict(union.dtypes)[meta.id_col],
+        committed, {"union": (union, meta.id_col)},
     )
-    if tomb is not None:
-        # the retrain must not learn from deleted vectors, and the rebuilt
-        # root makes the deletes physical (build_ivf_index clears the
-        # tombstone set inside its meta-less window)
-        union = union.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
-        )
-    if dst_index is None:
-        union = union.localCheckpoint(eager=True)
-        dst_index = index_path
-    # spent-id manifest via the ONE shared protocol (r17 unification —
-    # this was the last inline copy; rebuild_ivfpq_index and every
-    # compactor already route through _fold_manifest_forward): classify
-    # the folded batches WHILE their tombstone dirs still exist (the
-    # helper runs before build_ivf_index clears them) and write the
-    # manifest to dst BEFORE the new base can serve (r15 review: a
-    # post-meta write left a crash window with a healthy root and no
-    # manifest — exactly the replay double-count hole it closes).  Early
-    # marking is safe: the marked batches stay ledger-committed in the
-    # old root until the rebuild lands; a reused dst root's unrelated
-    # spent ids are cleared inside the helper.
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
     build_ivf_index(
-        union,
+        frames["union"],
         dst_index,
         n_centroids=int(n_centroids or meta.n_centroids),
         id_col=meta.id_col,
@@ -2551,33 +2425,24 @@ def extend_ivfpq_index(
     ``id_col``/``vec_col`` override the meta COLUMN NAMES when the
     delivered frame uses its own (config-driven callers pass theirs
     instead of pre-reading meta — one meta read per delivery)."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
-        return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
+
+    def write(df: DataFrame, meta, bid: str) -> None:
+        postings = _ivfpq_code_postings(
+            df, meta.id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
+            int(meta.n_codewords), int(meta.dim),
+        )
+        _write_artifact(postings, index_path, "postings", bid, "list", meta.id_col)
+
+    _extend_store(
+        df, index_path, batch_id, write,
+        names={"id_col": id_col, "vec_col": vec_col},
+        check=lambda meta: _check_ivfpq(index_path, meta),
     )
-    meta = read_meta_row(spark, index_path)
+
+
+def _check_ivfpq(index_path: str, meta) -> None:
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
-        )
-    _guard_delivery_id_type(
-        df, meta.id_col, _store_id_type(spark, index_path, meta), index_path
-    )
-    _guard_tombstoned_delivery(df.select(meta.id_col), index_path, meta.id_col)
-    postings = _ivfpq_code_postings(
-        df, meta.id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
-        int(meta.n_codewords), int(meta.dim),
-    )
-    _write_artifact(
-        postings, index_path, "postings", batch_id, "list", meta.id_col
-    )
-    ledger_commit(spark, index_path, batch_id)
 
 
 def rebuild_ivfpq_index(
@@ -2641,25 +2506,14 @@ def rebuild_ivfpq_index(
     _guard_delivery_id_type(
         union, meta.id_col, _store_id_type(spark, index_path, meta), index_path
     )
-    committed = _committed_batches(spark, index_path)
-    tomb = _tombstoned_ids(
-        spark, index_path, dict(union.dtypes)[meta.id_col], committed
+    # tombstoned ids drop out and the spent-id manifest lands at dst
+    # BEFORE the new base can serve (the shared compaction/rebuild protocol)
+    frames, dst_index = _fold_live(
+        spark, index_path, dst_index, dict(union.dtypes)[meta.id_col],
+        _committed_batches(spark, index_path), {"union": (union, meta.id_col)},
     )
-    if tomb is not None:
-        union = union.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
-        )
-    if dst_index is None:
-        # the anti-join reads this root's tombstones, which the build
-        # deletes inside its meta-less window — pin the retained set first
-        union = union.localCheckpoint(eager=True)
-        dst_index = index_path
-    # spent-id manifest BEFORE the new base can serve (shared compaction/
-    # rebuild protocol: carries src history forward, spends this rebuild's
-    # committed ids, clears a reused foreign dst's stale manifest)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
     build_ivfpq_index(
-        union,
+        frames["union"],
         dst_index,
         n_centroids=new_nc,
         m=new_m,
@@ -2687,69 +2541,24 @@ def ivfpq_topk_persisted(
     LUT lookups in the twin's exact left-to-right fold — BIT-IDENTICAL to
     :func:`ivf_pq_topk_md5` over the same corpus (tested), at 1/16th-ish
     the storage and scan bytes of the full-precision probe."""
-    import pandas as pd
-
     meta = read_meta_row(spark, index_path)
-    if meta.coarse != "md5pq":
-        raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
+    _check_ivfpq(index_path, meta)
     n_centroids, m_sub = int(meta.n_centroids), int(meta.m)
     n_codewords, dim = int(meta.n_codewords), int(meta.dim)
     dsub = dim // m_sub
     committed = _committed_batches(spark, index_path)
-    postings = committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(committed)
-    )
     id_col = meta.id_col
-    tomb = _tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[id_col], committed
-    )
-    if tomb is not None:
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
+    postings = _read_committed(spark, index_path, "postings", committed)
+    id_type = dict(postings.dtypes)[id_col]
+    postings = _live_rows(spark, index_path, postings, id_col, id_type, committed)
     books = np.asarray(pq_md5_sign_codebooks(m_sub, n_codewords, dsub, "ivfpq_book"))
-    qpdf = (
-        queries.select(query_id_col, query_vec_col)
-        .limit(int(max_query_rows) + 1)
-        .toPandas()
+    qids, qn, qdots, probes, pruned = _md5_query_probe(
+        queries, query_id_col, query_vec_col, max_query_rows,
+        "ivfpq_topk_persisted", n_centroids, dim, n_probe, postings,
     )
-    if len(qpdf) > max_query_rows:
-        raise ValueError(
-            f"ivfpq_topk_persisted: probe set exceeds "
-            f"max_query_rows={max_query_rows}; shard the query set or raise "
-            "the guard explicitly"
-        )
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
-    if len(qmat) and qmat.shape[1] != dim:
-        raise ValueError(f"query dim {qmat.shape[1]} != index dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    probes = (
-        np.stack(
-            [
-                np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe]
-                for i in range(len(qn))
-            ]
-        )
-        if len(qn)
-        else np.zeros((0, n_probe), dtype=np.int64)
-    )
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m_sub)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m_sub, n_codewords))
-    )
-    needed = sorted({int(x) for row in probes for x in row})
-    pruned = (
-        postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
-    )
+    luts = _pq_luts(qn, books, dsub)
     bcast = spark.sparkContext.broadcast((qids, probes, qdots, luts))
     q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(postings.dtypes)[id_col]
     kk = int(k)
 
     def scan(batches):
@@ -2760,35 +2569,15 @@ def ivfpq_topk_persisted(
             vids = batch[id_col].to_numpy()
             lists = batch["list"].to_numpy()
             codes = np.stack([np.asarray(c) for c in batch["pq_code"]])
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                # the twin's exact fold: base coarse dot, then the m LUT
-                # adds left-to-right (identical FP summation order)
-                acc = base[qi][lists[midx]].copy()
-                for j in range(len(tables[qi])):
-                    acc = acc + tables[qi][j][codes[midx, j]]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
+            # the twin's exact fold (identical FP summation order)
+            yield _probed_topk(
+                ids_q, prb, lists, vids, kk,
+                lambda qi, midx: _lut_fold(base[qi], tables[qi], lists[midx], codes[midx]),
+                (query_id_col, id_col, "approx_cosine"),
             )
 
     candidates = pruned.select(id_col, "list", "pq_code").mapInPandas(
         scan,
         schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
-    )
+    return _rank_per_query(candidates, query_id_col, id_col, "approx_cosine", k)
